@@ -484,7 +484,11 @@ def main() -> None:
     # the belt-and-braces copy (merged by core count — the driver benches
     # at 32 AND 8 cpus and both must survive).
     pq = per_query_record(
-        timings, sf, int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        timings, sf,
+        # unset: file the record under the cores this process may run
+        # on, not under an assumed 32
+        int(os.environ.get("SPARK_GRAFT_CPUS")
+            or len(os.sched_getaffinity(0))),
         machine_contaminated)
     write_per_query_sidecar(
         os.path.join(os.path.dirname(os.path.abspath(__file__)),

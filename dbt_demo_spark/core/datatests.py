@@ -13,6 +13,7 @@ surface) are provided as builders returning DataTests.
 from __future__ import annotations
 
 import functools
+import json
 import operator
 import re
 from collections.abc import Callable, Sequence
@@ -59,6 +60,14 @@ class DataTest:
     # tolerance contract (e.g. error_if: ">100" tolerates 100 dupes).
     warn_if: str = "!=0"
     error_if: str = "!=0"
+    # Test identity for Runner.build's outcome reuse under
+    # refresh="changed": ``key`` says WHAT the test checks (kind,
+    # columns, accepted values, severity, thresholds — the four generic
+    # tests below fill it), ``reads`` which relations it reads.  A test
+    # without a key (a bespoke fn the runner cannot see into) always
+    # runs.
+    key: str | None = None
+    reads: tuple[str, ...] = ()
 
     def __post_init__(self) -> None:
         _parse_threshold(self.warn_if)    # fail-loud at declaration
@@ -71,6 +80,9 @@ class DataTestResult:
     passed: bool
     violations: int
     severity: str = "error"
+    # True when Runner.build served a recorded passing outcome instead
+    # of running the test (refresh="changed" over an unchanged digest)
+    reused: bool = False
 
     @property
     def gating(self) -> bool:
@@ -79,6 +91,17 @@ class DataTestResult:
 
     def __bool__(self) -> bool:
         return self.passed
+
+
+def _generic(kind: str, name: str, fn, reads: tuple[str, ...],
+             spec: list, severity: str, warn_if: str,
+             error_if: str) -> DataTest:
+    """A generic test's DataTest, keyed by everything that decides its
+    outcome over fixed input relations."""
+    key = json.dumps([kind, *spec, severity, warn_if, error_if],
+                     default=repr)
+    return DataTest(name, fn, severity=severity, warn_if=warn_if,
+                    error_if=error_if, key=key, reads=reads)
 
 
 def unique(relation: str, columns: Sequence[str],
@@ -108,9 +131,9 @@ def unique(relation: str, columns: Sequence[str],
             .filter(F.col("n_rows") > 1)
         )
 
-    return DataTest(f"unique__{relation}__{'_'.join(cols)}", fn,
-                    severity=severity, warn_if=warn_if,
-                    error_if=error_if)
+    return _generic("unique", f"unique__{relation}__{'_'.join(cols)}", fn,
+                    (relation,), [relation, cols], severity, warn_if,
+                    error_if)
 
 
 def not_null(relation: str, columns: Sequence[str],
@@ -125,9 +148,9 @@ def not_null(relation: str, columns: Sequence[str],
             operator.or_, [F.col(c).isNull() for c in cols])
         return rel[relation].filter(cond)
 
-    return DataTest(f"not_null__{relation}__{'_'.join(cols)}", fn,
-                    severity=severity, warn_if=warn_if,
-                    error_if=error_if)
+    return _generic("not_null", f"not_null__{relation}__{'_'.join(cols)}",
+                    fn, (relation,), [relation, cols], severity, warn_if,
+                    error_if)
 
 
 def accepted_values(relation: str, column: str,
@@ -141,9 +164,10 @@ def accepted_values(relation: str, column: str,
         c = F.col(column)
         return rel[relation].filter(c.isNotNull() & ~c.isin(*values))
 
-    return DataTest(f"accepted_values__{relation}__{column}", fn,
-                    severity=severity, warn_if=warn_if,
-                    error_if=error_if)
+    return _generic("accepted_values",
+                    f"accepted_values__{relation}__{column}", fn,
+                    (relation,), [relation, column, list(values)],
+                    severity, warn_if, error_if)
 
 
 def relationships(relation: str, column: str,
@@ -159,9 +183,11 @@ def relationships(relation: str, column: str,
         parent = rel[to_relation].select(F.col(to_column).alias(column)).distinct()
         return child.join(parent, column, "left_anti")
 
-    return DataTest(
-        f"relationships__{relation}__{column}__{to_relation}", fn,
-        severity=severity, warn_if=warn_if, error_if=error_if)
+    return _generic(
+        "relationships", f"relationships__{relation}__{column}__{to_relation}",
+        fn, (relation, to_relation),
+        [relation, column, to_relation, to_column], severity, warn_if,
+        error_if)
 
 
 def run_data_tests(tests: list[DataTest],

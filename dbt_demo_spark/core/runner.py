@@ -97,7 +97,8 @@ class BuildResult:
                     "seconds": round(n.seconds, 3),
                     "tests": [{"name": t.name, "passed": t.passed,
                                "violations": t.violations,
-                               "severity": t.severity}
+                               "severity": t.severity,
+                               "reused": t.reused}
                               for t in n.tests],
                 } for n in self.nodes.values()
             },
@@ -175,19 +176,24 @@ class Runner:
         except (OSError, ValueError):
             return {}
 
-    def _save_state(self, name: str, fingerprint: str | None) -> None:
-        """Record (or, with None, drop) a model's build fingerprint.
-        Read-modify-write under the lock (parallel runs build disjoint
-        models, but they share this file); atomic rename so a crashed
-        write can never half-corrupt the JSON into false skips."""
+    def _save_state(self, key: str, value) -> None:
+        """Record (or, with None, drop) one build-state entry: a model's
+        build fingerprint under its name, or a node's passing test
+        outcomes under ``tests:<name>``.  Read-modify-write under the
+        lock (parallel runs build disjoint models, but they share this
+        file); atomic rename so a crashed write can never half-corrupt
+        the JSON into false skips."""
         with self._fp_lock:
             state = self._load_state()
-            if fingerprint is None:
-                if name not in state:
+            if value is None:
+                if key not in state:
                     return
-                del state[name]
+                del state[key]
             else:
-                state[name] = fingerprint
+                state[key] = value
+            # a view node's tests may record before any table has
+            # created the warehouse dir
+            os.makedirs(self.warehouse_dir, exist_ok=True)
             tmp = self._state_path + ".tmp"
             with open(tmp, "w") as f:
                 json.dump(state, f)
@@ -270,10 +276,12 @@ class Runner:
         fingerprint chains its fn's source code, its materialization
         params, every upstream model's fingerprint, and the (path, size,
         mtime) of every FILE its source relations scan.  Unchanged ->
-        read the existing table back (zero Spark jobs); any unknowable
-        input (non-file source, unreadable fn source, bucketed catalog
-        table) -> rebuilt, never guessed.  ``last_refresh_report`` lists
-        what was built vs skipped."""
+        read the existing table back (no rebuild: only the parquet schema
+        read runs a job); any unknowable input (non-file source,
+        unreadable fn source, bucketed catalog table) -> rebuilt, never
+        guessed.  ``last_refresh_report`` lists
+        what was built vs skipped.  ``build`` extends the same rule to
+        data tests: see there."""
         if refresh not in ("full", "changed"):
             raise ValueError(f"refresh must be 'full' or 'changed', "
                              f"got {refresh!r}")
@@ -340,7 +348,23 @@ class Runner:
         leaves it too); only scheduling treats it as poisoned.  Selection
         grammar and ``threads`` behave exactly as in ``run``: the
         dependency gate decides when a node starts, so results are
-        identical at any thread count."""
+        identical at any thread count.
+
+        Under ``refresh="changed"`` a node's tests are not re-run when
+        nothing they depend on changed.  After every build (any refresh
+        mode except ``empty``) the node's test digest — its fingerprint,
+        the fingerprint of every other relation its tests read, and the
+        tests' names and keys — is recorded with the outcomes in
+        ``_build_state.json``, but only when every test passed.  A later
+        ``refresh="changed"`` build serves those recorded passes only over
+        the SAME digest; a failing or warning outcome is never recorded,
+        so it re-runs, and a test without a key (a bespoke
+        ``DataTest``), like any node with an unknowable fingerprint,
+        always runs.  Like the table skip, this rests on equal
+        fingerprints meaning equal data.  ``full_refresh`` and ``empty``
+        never reuse.  Reused
+        outcomes carry ``reused=True`` (``run_results.json`` too), and
+        ``last_refresh_report["tests_reused"]`` names them."""
         if refresh not in ("full", "changed"):
             raise ValueError(f"refresh must be 'full' or 'changed', "
                              f"got {refresh!r}")
@@ -359,7 +383,8 @@ class Runner:
         self._empty = empty
         self._batch_id = None
         self._fp_memo = {}
-        self.last_refresh_report = {"built": [], "skipped": []}
+        self.last_refresh_report = {"built": [], "skipped": [],
+                                    "tests_reused": []}
 
         relations: dict[str, DataFrame] = dict(sources)
         nodes: dict[str, NodeResult] = {}
@@ -402,11 +427,7 @@ class Runner:
             if mdef.tests:
                 rel = dict(relations)
                 rel[name] = df
-                trs = run_data_tests(
-                    list(mdef.tests), rel,
-                    store_failures_dir=(
-                        os.path.join(self.warehouse_dir, "_test_failures")
-                        if self.store_failures else None))
+                trs = self._run_tests(name, list(mdef.tests), rel)
             return df, trs, time.perf_counter() - t0
 
         with ThreadPoolExecutor(max(1, threads)) as ex:
@@ -474,6 +495,55 @@ class Runner:
                 seeded[n] = prior.relations[n]
         return self.build(seeded, select=redo, threads=threads)
 
+    def _run_tests(self, name: str, tests: list,
+                   relations: dict[str, DataFrame]) -> list[DataTestResult]:
+        """Run ``name``'s attached tests — or, under refresh="changed",
+        serve the passing outcomes recorded over the same test digest
+        (the reuse rule in ``build``'s docstring)."""
+        digest = (None if self._empty
+                  else self._tests_digest(name, tests, relations))
+        key = f"tests:{name}"
+        if (digest is not None and self._refresh_changed
+                and not self._full_refresh):
+            rec = self._load_state().get(key)
+            if rec is not None and rec["digest"] == digest:
+                self.last_refresh_report["tests_reused"].extend(
+                    [t.name for t in tests])
+                return [DataTestResult(t.name, True, n, t.severity,
+                                       reused=True)
+                        for t, n in zip(tests, rec["violations"])]
+        trs = run_data_tests(
+            tests, relations,
+            store_failures_dir=(
+                os.path.join(self.warehouse_dir, "_test_failures")
+                if self.store_failures else None))
+        if digest is not None:
+            self._save_state(key, (
+                {"digest": digest, "violations": [t.violations for t in trs]}
+                if all(t.passed for t in trs) else None))
+        return trs
+
+    def _tests_digest(self, name: str, tests: list,
+                      relations: dict[str, DataFrame]) -> str | None:
+        """What ``name``'s test outcomes depend on: the node's fingerprint,
+        the fingerprint of every OTHER relation the tests read (a
+        relationships parent, a source), and each test's name and key.
+        None = not reusable: a key-less test, or any input the
+        fingerprints cannot know."""
+        if any(t.key is None for t in tests):
+            return None
+        parts = [self._fingerprint(name, relations)]
+        for r in sorted({r for t in tests for r in t.reads} - {name}):
+            if r not in relations:
+                return None
+            parts.append(self._fingerprint(r, relations)
+                         if r in self.registry
+                         else self._source_fingerprint(r, relations[r]))
+        if None in parts:
+            return None
+        return hashlib.sha1(json.dumps(
+            [parts, [[t.name, t.key] for t in tests]]).encode()).hexdigest()
+
     def _fingerprint(self, name: str,
                      relations: dict[str, DataFrame]) -> str | None:
         """Build-state fingerprint of ``name``'s whole upstream cone: the
@@ -527,31 +597,38 @@ class Runner:
                         break
                     parts.append(f"{d}:{sub}")
                     continue
-                src = relations[d]
-                files = sorted(src.inputFiles())
-                if not files:
-                    parts = None  # in-memory / non-file source
+                sub = self._source_fingerprint(d, relations[d])
+                if sub is None:
+                    parts = None
                     break
-                parts.append(f"{d}~" + src._jdf.queryExecution().analyzed()
-                             .canonicalized().toString())
-                for uri in files:
-                    u = urlparse(uri)
-                    if u.scheme not in ("", "file"):
-                        parts = None  # remote FS: no stat client here
-                        break
-                    try:
-                        st = os.stat(unquote(u.path))
-                    except OSError:
-                        parts = None
-                        break
-                    parts.append(f"{d}|{uri}|{st.st_size}|{st.st_mtime_ns}")
-                if parts is None:
-                    break
+                parts.append(sub)
         fp = (None if parts is None
               else hashlib.sha1("\n".join(parts).encode()).hexdigest())
         with self._fp_lock:
             self._fp_memo[name] = fp
         return fp
+
+    @staticmethod
+    def _source_fingerprint(name: str, src: DataFrame) -> str | None:
+        """One SOURCE relation's part of a fingerprint: its canonicalized
+        logical plan plus the (path, size, mtime_ns) of every file it
+        scans — file metadata only, no Spark job.  None for an
+        in-memory source or a remote file system (no stat client here)."""
+        files = sorted(src.inputFiles())
+        if not files:
+            return None
+        parts = [f"{name}~" + src._jdf.queryExecution().analyzed()
+                 .canonicalized().toString()]
+        for uri in files:
+            u = urlparse(uri)
+            if u.scheme not in ("", "file"):
+                return None
+            try:
+                st = os.stat(unquote(u.path))
+            except OSError:
+                return None
+            parts.append(f"{name}|{uri}|{st.st_size}|{st.st_mtime_ns}")
+        return "\n".join(parts)
 
     def _try_skip(self, name: str, mdef,
                   relations: dict[str, DataFrame]) -> DataFrame | None:

@@ -460,7 +460,9 @@ def register_test_dir(registry: ModelRegistry, tests_dir: str,
     model (computed, never stored) whose one attached DataTest returns
     the model's own relation, so ``Runner.build`` runs it exactly when
     all referenced models are built and fails the node (poisoning
-    descendants) when the query yields rows."""
+    descendants) when the query yields rows.  The test is keyed by that
+    node alone: the node's fingerprint already covers the SQL text and
+    every ref, which is all a passing outcome depends on."""
     from .datatests import DataTest
     from .model import ModelDef
 
@@ -476,7 +478,8 @@ def register_test_dir(registry: ModelRegistry, tests_dir: str,
             fn, deps = sql_model_fn(name, sql_text)
             registry.register(ModelDef(
                 name=name, deps=deps, materialized="ephemeral", fn=fn,
-                tests=(DataTest(name, lambda rel, n=name: rel[n]),),
+                tests=(DataTest(name, lambda rel, n=name: rel[n],
+                                key=f"singular:{name}", reads=(name,)),),
                 tags=("singular-test",),
                 doc=f"singular data test (source length {len(sql_text)}"
                     " chars)"))

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -408,6 +409,14 @@ def sim_topk_lsh_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
+# persisted indexes live under <repo>/<subdir>/<tag>; one build lock per
+# index kind (the subdir), never held across another _session_index call,
+# so builds cannot deadlock on each other
+_INDEX_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
+_SESSION_INDEX_LOCKS: dict = {}
+
+
 # the synthetic embeddings are near-uniform (max pairwise cosine ~0.46 at
 # sf0.01), so the catalog query uses a low threshold to exercise the
 # operator on real rows; true dup recovery at ~1.0 is pytest-verified with
@@ -415,21 +424,27 @@ def sim_topk_lsh_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _session_index(cache: dict, subdir: str, spark: SparkSession,
                    sf_dir: str, build_fn):
     """Build-once-per-(session, sf_dir) persisted-index memo shared by the
-    IVF and PQ catalog rows: the index is a materialization, not per-query
-    work.  The on-disk tag hashes the ABSOLUTE dir (basename kept for
-    readability): two sf_dirs sharing a basename must not share an on-disk
-    index path, or the second build silently overwrites the corpus the
-    first handle still reads."""
+    IVF, PQ and LSH catalog rows: the index is a materialization, not
+    per-query work.  The on-disk tag hashes the ABSOLUTE dir (basename kept
+    for readability): two sf_dirs sharing a basename must not share an
+    on-disk index path, or the second build silently overwrites the corpus
+    the first handle still reads.  Double-checked under a per-kind lock:
+    two cold callers of one index (sim_topk_lsh and dedup_embedding_cosine
+    share the LSH index) must not both overwrite-write the same path
+    (tests/test_semdedup.py runs that race)."""
     key = (spark.sparkContext.applicationId, sf_dir)
     idx = cache.get(key)
-    if idx is None:
-        abs_dir = os.path.abspath(sf_dir)
-        digest = hashlib.sha1(abs_dir.encode()).hexdigest()[:8]
-        tag = f"{os.path.basename(os.path.normpath(abs_dir)) or 'default'}-{digest}"
-        path = os.path.join(os.path.dirname(os.path.dirname(
-            os.path.dirname(os.path.abspath(__file__)))), subdir, tag)
-        idx = build_fn(path)
-        cache[key] = idx
+    if idx is not None:
+        return idx
+    with _SESSION_INDEX_LOCKS.setdefault(subdir, threading.Lock()):
+        idx = cache.get(key)
+        if idx is None:
+            abs_dir = os.path.abspath(sf_dir)
+            digest = hashlib.sha1(abs_dir.encode()).hexdigest()[:8]
+            tag = (f"{os.path.basename(os.path.normpath(abs_dir)) or 'default'}"
+                   f"-{digest}")
+            idx = build_fn(os.path.join(_INDEX_ROOT, subdir, tag))
+            cache[key] = idx
     return idx
 
 
@@ -866,7 +881,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     gathers vectors from a task-resident matrix read from the index
     parquet, killing the JVM dot fold over every candidate pair (2.6 s of
     the 3.4 s sf1 wall).  Bit-identical rows to the inline form
-    (tests/test_semdedup.py pins indexed == inline;
+    (tests/test_semdedup.py
+    test_embedding_dedup_indexed_equals_inline pins indexed == inline;
     `dedup_embedding_cosine_inline` below keeps the raw-scan twin); the
     DuckDB oracle still computes from the raw embeddings, so layout can
     never change answers.  Build receipt: EMB_DEDUP_RECEIPT.json."""

@@ -208,3 +208,250 @@ def test_changed_refresh_handles_percent_encoded_paths(spark, tmp_path):
     r = Runner(spark, reg, wh)
     r.run({"src": spark.read.parquet(src)}, refresh="changed")
     assert r.last_refresh_report["skipped"] == ["m"]
+
+
+# --------------------------------------------------------------------------
+# data-test outcome reuse: Runner.build(refresh="changed") serves the
+# recorded PASSING outcomes of a node whose test digest is unchanged
+# --------------------------------------------------------------------------
+
+_SCHEMA = """
+version: 2
+models:
+  - name: stg_orders
+    columns:
+      - name: order_id
+        tests: [unique]
+      - name: status
+        tests:
+          - accepted_values:
+              values: {values}
+  - name: stg_customers
+    columns:
+      - name: cust_id
+        tests: [unique, not_null]
+  - name: fct_orders
+    columns:
+      - name: order_id
+        tests: [not_null]
+      - name: cust_id
+        tests:
+          - relationships:
+              to: source('raw', 'customers')
+              field: cust_id
+  - name: dim_customers
+    columns:
+      - name: cust_id
+        tests: [unique]
+"""
+
+
+def _write_orders(spark, path: str, statuses=("F", "O")):
+    (spark.createDataFrame(
+        [(i, i % 3, statuses[i % len(statuses)]) for i in range(12)],
+        "order_id long, cust_id long, status string")
+     .coalesce(1).write.mode("overwrite").parquet(path))
+
+
+def _write_customers(spark, path: str, ids=(0, 1, 2)):
+    (spark.createDataFrame([(i, f"r{i}") for i in ids],
+                           "cust_id long, region string")
+     .coalesce(1).write.mode("overwrite").parquet(path))
+
+
+def _tested_registry(tmp_path, values="['F', 'O']"):
+    """Two staging views and two tables over two parquet sources; the
+    generic tests come from schema.yml text, plus one singular SQL test
+    on fct_orders."""
+    from dbt_demo_spark.core.project import attach_properties
+    from dbt_demo_spark.core.sqlmodel import register_test_dir
+
+    reg = ModelRegistry()
+
+    @reg.model("stg_orders", deps=("orders",), materialized="view")
+    def stg_orders(refs):
+        return refs["orders"].select("order_id", "cust_id", "status")
+
+    @reg.model("stg_customers", deps=("customers",), materialized="view")
+    def stg_customers(refs):
+        return refs["customers"].select("cust_id", "region")
+
+    @reg.model("fct_orders", deps=("stg_orders",), materialized="table")
+    def fct_orders(refs):
+        return refs["stg_orders"].filter(F.col("order_id") >= 0)
+
+    @reg.model("dim_customers", deps=("stg_customers",),
+               materialized="table")
+    def dim_customers(refs):
+        return refs["stg_customers"].dropDuplicates(["cust_id"])
+
+    attach_properties(reg, _SCHEMA.format(values=values))
+    tests_dir = tmp_path / "singular"
+    tests_dir.mkdir(exist_ok=True)
+    (tests_dir / "assert_orders_nonnegative.sql").write_text(
+        "select * from {{ ref('fct_orders') }} where order_id < 0")
+    register_test_dir(reg, str(tests_dir))
+    return reg
+
+
+def _tested_sources(spark, tmp_path):
+    return {"orders": spark.read.parquet(str(tmp_path / "orders")),
+            "customers": spark.read.parquet(str(tmp_path / "customers"))}
+
+
+def _tested_project(spark, tmp_path):
+    _write_orders(spark, str(tmp_path / "orders"))
+    _write_customers(spark, str(tmp_path / "customers"))
+    wh = str(tmp_path / "wh")
+    res = Runner(spark, _tested_registry(tmp_path), wh).build(
+        _tested_sources(spark, tmp_path))
+    assert res.ok, res.to_json()
+    return wh
+
+
+def _reused(res) -> dict[str, bool]:
+    return {t.name: t.reused for n in res.nodes.values() for t in n.tests}
+
+
+def _count_jobs_since(spark, last_id: int) -> int:
+    """SQL executions launched by ``count()`` after execution ``last_id``,
+    read from the session's SQL status store."""
+    it = (spark._jsparkSession.sharedState().statusStore()
+          .executionsList().iterator())
+    n = 0
+    while it.hasNext():
+        e = it.next()
+        if e.executionId() > last_id and \
+                e.description().startswith("count at"):
+            n += 1
+    return n
+
+
+def _last_execution_id(spark) -> int:
+    it = (spark._jsparkSession.sharedState().statusStore()
+          .executionsList().iterator())
+    last = -1
+    while it.hasNext():
+        last = max(last, it.next().executionId())
+    return last
+
+
+def test_noop_changed_build_reuses_every_test_with_zero_count_jobs(
+        spark, tmp_path):
+    import json
+
+    wh = _tested_project(spark, tmp_path)
+    with open(os.path.join(wh, "run_results.json")) as f:
+        first = json.load(f)
+    assert not any(t["reused"] for n in first["nodes"].values()
+                   for t in n["tests"])
+
+    # a NEW Runner over the same warehouse reuses, as it reuses skips
+    r = Runner(spark, _tested_registry(tmp_path), wh)
+    before = _last_execution_id(spark)
+    res = r.build(_tested_sources(spark, tmp_path), refresh="changed")
+    assert _count_jobs_since(spark, before) == 0
+    assert res.ok
+    outcomes = [t for n in res.nodes.values() for t in n.tests]
+    assert len(outcomes) == 8
+    assert all(t.passed and t.reused for t in outcomes)
+    assert sorted(r.last_refresh_report["tests_reused"]) == sorted(
+        t.name for t in outcomes)
+    assert set(r.last_refresh_report["skipped"]) == {"fct_orders",
+                                                     "dim_customers"}
+    with open(os.path.join(wh, "run_results.json")) as f:
+        again = json.load(f)
+    assert all(t["reused"] and t["passed"]
+               for n in again["nodes"].values() for t in n["tests"])
+
+
+def test_edited_accepted_values_rerun_under_the_same_test_name(
+        spark, tmp_path):
+    wh = _tested_project(spark, tmp_path)
+    r = Runner(spark, _tested_registry(tmp_path, values="['F']"), wh)
+    res = r.build(_tested_sources(spark, tmp_path), refresh="changed")
+    (av,) = [t for t in res.nodes["stg_orders"].tests
+             if t.name == "accepted_values__stg_orders__status"]
+    assert not av.reused and not av.passed and av.violations == 6
+    # per node: the unchanged sibling test on stg_orders re-runs too,
+    # other nodes' tests are served
+    assert not any(t.reused for t in res.nodes["stg_orders"].tests)
+    assert res.nodes["stg_customers"].tests[0].reused
+
+
+def test_touched_source_reruns_exactly_its_downstream_cone(spark, tmp_path):
+    wh = _tested_project(spark, tmp_path)
+    _write_orders(spark, str(tmp_path / "orders"), statuses=("O", "F"))
+    r = Runner(spark, _tested_registry(tmp_path), wh)
+    res = r.build(_tested_sources(spark, tmp_path), refresh="changed")
+    assert res.ok
+    cone = {"stg_orders", "fct_orders", "assert_orders_nonnegative"}
+    for name, node in res.nodes.items():
+        assert all(t.reused == (name not in cone) for t in node.tests), name
+    assert set(r.last_refresh_report["tests_reused"]) == {
+        t.name for n in ("stg_customers", "dim_customers")
+        for t in res.nodes[n].tests}
+
+
+def test_relationships_reruns_when_only_its_to_relation_changed(
+        spark, tmp_path):
+    wh = _tested_project(spark, tmp_path)
+    _write_customers(spark, str(tmp_path / "customers"), ids=(0, 1))
+    r = Runner(spark, _tested_registry(tmp_path), wh)
+    res = r.build(_tested_sources(spark, tmp_path), refresh="changed")
+    assert "fct_orders" in r.last_refresh_report["skipped"]
+    rel = {t.name: t for t in res.nodes["fct_orders"].tests}[
+        "relationships__fct_orders__cust_id__customers"]
+    assert not rel.reused and not rel.passed and rel.violations == 4
+
+
+def test_failing_warn_and_keyless_tests_rerun_every_refresh(spark, tmp_path):
+    from dbt_demo_spark.core.datatests import DataTest, unique
+
+    src = str(tmp_path / "src")
+    _write_src(spark, src, [1, 2])           # 3 rows per day
+    reg = ModelRegistry()
+
+    @reg.model("failing", deps=("src",), materialized="table",
+               tests=(unique("failing", ["day"]),))
+    def failing(refs):
+        return refs["src"]
+
+    @reg.model("warning", deps=("src",), materialized="table",
+               tests=(unique("warning", ["day"], severity="warn"),))
+    def warning(refs):
+        return refs["src"]
+
+    @reg.model("keyless", deps=("src",), materialized="table",
+               tests=(unique("keyless", ["v"]),
+                      DataTest("no_key", lambda rel: rel["keyless"]
+                               .filter(F.col("v") < 0))))
+    def keyless(refs):
+        return refs["src"]
+
+    wh = str(tmp_path / "wh")
+    for _ in range(3):
+        r = Runner(spark, reg, wh)
+        res = r.build({"src": spark.read.parquet(src)}, refresh="changed")
+        assert r.last_refresh_report["tests_reused"] == []
+        assert not any(_reused(res).values())
+        assert res.nodes["failing"].status == "fail"
+        (w,) = res.nodes["warning"].tests
+        assert (w.passed, w.severity, w.violations) == (False, "warn", 2)
+        assert res.nodes["keyless"].status == "success"
+
+
+def test_full_refresh_empty_and_full_builds_never_reuse(spark, tmp_path):
+    wh = _tested_project(spark, tmp_path)
+    for kwargs in ({"refresh": "full"},
+                   {"refresh": "changed", "full_refresh": True},
+                   {"refresh": "changed", "empty": True}):
+        r = Runner(spark, _tested_registry(tmp_path), wh)
+        res = r.build(_tested_sources(spark, tmp_path), **kwargs)
+        assert res.ok, kwargs
+        assert r.last_refresh_report["tests_reused"] == [], kwargs
+        assert not any(_reused(res).values()), kwargs
+    # none of those dropped what the last real build recorded
+    r = Runner(spark, _tested_registry(tmp_path), wh)
+    res = r.build(_tested_sources(spark, tmp_path), refresh="changed")
+    assert res.ok and all(_reused(res).values())

@@ -159,3 +159,80 @@ def test_semantic_dedup_keeps_centroid_nearest(spark):
     assert sum(1 for k, _ in rep.values() if k) == 1
     winner = next(v for v, (k, _) in rep.items() if k)
     assert rep[winner][1] == max(s for _, s in rep.values())
+
+
+def _private_corpus(tmp_path, monkeypatch):
+    """A corpus dir no other test has indexed, with the persisted indexes
+    redirected under tmp_path: every _session_index lookup starts cold."""
+    import shutil
+
+    from dbt_demo_spark.queries import llm_pipeline
+
+    d = tmp_path / "corpus"
+    d.mkdir()
+    shutil.copy(f"{SF_GATE}/embeddings.parquet", d / "embeddings.parquet")
+    monkeypatch.setattr(llm_pipeline, "_INDEX_ROOT", str(tmp_path))
+    return str(d)
+
+
+def _rows(df):
+    return sorted(map(tuple, df.collect()))
+
+
+def test_embedding_dedup_indexed_equals_inline(spark, tmp_path, monkeypatch):
+    """dedup_embedding_cosine (served from the persisted LSH index) returns
+    the same rows, cosine doubles included, as its raw-scan twin."""
+    from dbt_demo_spark.queries.llm_pipeline import (
+        dedup_embedding_cosine, dedup_embedding_cosine_inline)
+
+    d = _private_corpus(tmp_path, monkeypatch)
+    served = _rows(dedup_embedding_cosine(spark, d))
+    assert served and served == _rows(dedup_embedding_cosine_inline(spark, d))
+
+
+def test_lsh_index_two_thread_cold_start_builds_once(spark, tmp_path,
+                                                     monkeypatch):
+    """sim_topk_lsh and dedup_embedding_cosine share one persisted LSH
+    index; started together from a cold cache they must build it once —
+    two overwrite-writes to one path crashed the 8-CPU bench — and both
+    answer exactly like their raw-scan twins."""
+    import threading
+    import time
+
+    from dbt_demo_spark.operators import similarity
+    from dbt_demo_spark.queries.llm_pipeline import (
+        dedup_embedding_cosine, dedup_embedding_cosine_inline, sim_topk_lsh,
+        sim_topk_lsh_inline)
+
+    d = _private_corpus(tmp_path, monkeypatch)
+    builds = []
+    real_build = similarity.build_lsh_index
+
+    def slow_build(*args, **kwargs):
+        builds.append(args[1])
+        time.sleep(0.5)  # hold the race window open
+        return real_build(*args, **kwargs)
+
+    monkeypatch.setattr(similarity, "build_lsh_index", slow_build)
+    start = threading.Barrier(2, timeout=60)
+    out, errors = {}, []
+
+    def call(fn):
+        try:
+            start.wait()
+            out[fn.__name__] = _rows(fn(spark, d))
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    threads = [threading.Thread(target=call, args=(fn,))
+               for fn in (sim_topk_lsh, dedup_embedding_cosine)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert len(builds) == 1
+    assert out["sim_topk_lsh"] == _rows(sim_topk_lsh_inline(spark, d))
+    assert out["dedup_embedding_cosine"] == _rows(
+        dedup_embedding_cosine_inline(spark, d))
