@@ -114,7 +114,9 @@ def decontaminate(corpus: DataFrame, eval_docs: DataFrame,
     whole upstream corpus plan, and leaving it lazy re-executes that
     upstream once per downstream REFERENCE per action — inside clean_corpus
     the near-dup stage references its input several times, which would
-    multiply the report's corpus pass."""
+    multiply the report's corpus pass.  clean_corpus hands this function
+    its materialized row-local prefix, so the report reads that shared
+    materialization instead of re-running ingest and exact dedup."""
     bad = (contamination_report(corpus, eval_docs, text_col, id_col)
            .filter(F.col("n_matched") >= min_matched)
            .select(F.col("doc_id").alias(id_col))

@@ -579,9 +579,14 @@ def incremental_minhash_dedup(new_docs: DataFrame, index_dir: str,
          (staged behind the same underscore veil, then one rename), so a
          replay never duplicates index entries.
 
-    The dropped/already-ingested id sets are materialized (localCheckpoint)
-    BEFORE the commit so no lazy plan can observe the batch's own
-    fingerprints in the index.
+    The cross pairs and the dropped id set are materialized
+    (localCheckpoint) BEFORE the commit so no lazy plan can observe the
+    batch's own fingerprints in the index.  The cross-pair materialization
+    is the ONE scan of the index's band rows per batch: the
+    already-ingested ids and the cross candidates both read it.  Inside
+    clean_corpus, ``new_docs`` reads the funnel's materialized row-local
+    prefix, so the featurization's two branches and the kept rows do not
+    re-run the upstream funnel.
 
     ``sink``: optional callable invoked with the kept rows BEFORE the index
     commit — the exactly-once hook for streaming replay (streaming/
@@ -631,6 +636,9 @@ def incremental_minhash_dedup(new_docs: DataFrame, index_dir: str,
     new_bands = shingle_arrow.band_rows(feats_new)
     cands = lsh_candidates(new_bands, max_bucket)
     old_feats = read_index(spark, index_dir)
+    # the index's band rows are scanned ONCE per batch: the cross pairs
+    # are materialized and both consumers (already-ingested ids, cross
+    # candidates) read that one materialization
     cross = (
         shingle_arrow.band_rows(old_feats)
         .unionByName(_identity_bands(old_feats)).alias("o")
@@ -640,10 +648,10 @@ def incremental_minhash_dedup(new_docs: DataFrame, index_dir: str,
               & (F.col("o.band_key") == F.col("nw.band_key")))
         .select(F.col("o.doc_id").alias("d1"),
                 F.col("nw.doc_id").alias("d2"))
-        .distinct())
+        .distinct()
+        .localCheckpoint(eager=True))
     already = (cross.filter(F.col("d1") == F.col("d2"))
-               .select(F.col("d2").alias(id_col)).distinct()
-               .localCheckpoint(eager=True))
+               .select(F.col("d2").alias(id_col)))
     cands = cands.unionByName(cross.filter(F.col("d1") != F.col("d2")))
     sets = (feats_new.select("doc_id", "ss", "n")
             .unionByName(old_feats.select("doc_id", "ss", "n")))

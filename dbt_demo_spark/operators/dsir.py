@@ -98,8 +98,11 @@ def dsir_logweight(text: Column, table: list[float]) -> Column:
     sum, one divide — the association order the DuckDB and Arrow twins
     replicate bit-for-bit.  NULL for texts with < 2 tokens (no bigram
     feature to score)."""
+    import numpy as np
+
     dim = len(table)
-    lut = F.lit([float(v) for v in table])
+    # an ndarray literal crosses py4j in one call; a list is one per entry
+    lut = F.lit(np.asarray(table, np.float64))
     toks = F.split(text, " ")
     hs = F.transform(toks, lambda t: char_hash(t))
     n = F.size(toks)

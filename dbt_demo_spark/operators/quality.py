@@ -145,8 +145,11 @@ def quality_margin(text: Column, weights: list[float],
     left-to-right sum, one divide — the association order the DuckDB
     and Arrow twins replicate bit-for-bit.  NULL for NULL/empty text
     (no tokens to score)."""
+    import numpy as np
+
     dim = len(weights)
-    lut = F.lit([float(v) for v in weights])
+    # an ndarray literal crosses py4j in one call; a list is one per entry
+    lut = F.lit(np.asarray(weights, np.float64))
     toks = F.split(text, " ")
     vals = F.transform(toks, lambda t: F.element_at(
         lut, (char_hash(t) % dim) + 1))

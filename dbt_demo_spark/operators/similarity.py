@@ -262,7 +262,8 @@ def embedding_near_dups(vectors: DataFrame, threshold: float = 0.9,
 # workers, unlike __main__ closures).  ~50 MB at sf1 (100k x 64 doubles);
 # at 100 TB the corpus matrix shards with the bucket partitioning and each
 # task gathers only from its candidate range — locally the whole matrix
-# fits every worker, which is the measured-fastest layout.
+# fits every worker, which is the measured-fastest layout.  One entry: a
+# worker keeps only the matrix of the last index it served.
 _GATHER_CACHE: dict[tuple, tuple] = {}
 
 
@@ -286,8 +287,24 @@ def _gather_matrix(files: tuple[str, ...]) -> tuple:
         norms = tbl["cn"].to_numpy().astype(np.float64, copy=False)
         order = np.argsort(ids)
         got = (ids[order], mat[order], norms[order])
+        _GATHER_CACHE.clear()
         _GATHER_CACHE[files] = got
     return got
+
+
+def _gather_rows(ids: np.ndarray, want: np.ndarray) -> np.ndarray:
+    """Row of each id of ``want`` in the sorted ``ids``.  Raises when an
+    id has no row — a matrix stale against the index it was keyed by
+    would otherwise hand back a neighboring row and score the wrong
+    vector."""
+    pos = np.searchsorted(ids, want)
+    found = pos < len(ids)
+    found[found] = ids[pos[found]] == want[found]
+    if not found.all():
+        raise ValueError(
+            f"gather matrix has no row for ids {want[~found][:5].tolist()}: "
+            "it is stale against the index being served")
+    return pos
 
 
 def embedding_near_dups_indexed(index: DataFrame,
@@ -336,8 +353,8 @@ def embedding_near_dups_indexed(index: DataFrame,
                    .astype(np.int64, copy=False)
             d2 = rb.column(1).to_numpy(zero_copy_only=False) \
                    .astype(np.int64, copy=False)
-            i1 = np.searchsorted(ids, d1)
-            i2 = np.searchsorted(ids, d2)
+            i1 = _gather_rows(ids, d1)
+            i2 = _gather_rows(ids, d2)
             v1, v2 = mat[i1], mat[i2]
             acc = np.zeros(rb.num_rows, dtype=np.float64)
             for d in range(DIM):        # sequential in d == the fold order

@@ -13,11 +13,20 @@ user actually runs, wired from the package's own operators —
            vs the persisted fingerprint index -> train/val/test split
 
 Per-stage funnel counts use ``DataFrame.observe`` (the Observation API):
-each stage's row count is collected by the SAME job that materializes the
-output — no extra count() passes over the corpus, which at 100 TB is the
-difference between one scan and seven.  The only extra actions are the two
-incremental-dedup internals (dropped-id materialization + index append),
-which exist for correctness, not observability.
+each stage's row count is collected by a job the funnel runs anyway — no
+count() pass per stage.  The row-local prefix (ingest, exact dedup and
+the repetition/LM/classifier/DSIR bands) is materialized ONCE
+(``localCheckpoint``), so the batch's input is scanned by that one job
+and its taps fire there.  The later actions all read the materialization:
+
+  * decontamination: its contaminated-id set (operators/decontaminate.py);
+  * boilerplate: the census ingest and its commit;
+  * incremental near-dup: the feature write to staging, the cross-pair,
+    dropped-id and already-indexed materializations, and the index commit
+    (operators/dedup.incremental_minhash_dedup);
+  * the caller's write (or the ``sink``), where the later taps fire.
+
+None of them exists for observability; each is a stage's own work.
 
 Every stage is an operator tested on its own (tests/test_text_filters.py,
 tests/test_dedup_incremental.py); this module's tests pin the composition:
@@ -207,6 +216,14 @@ def clean_corpus(new_docs: DataFrame, index_dir: str, *,
                            & (dw >= float(min_dsir_logweight))),
                  "after_dsir")
 
+    # ONE materialization of the row-local prefix (ingest, exact-dedup
+    # shuffle, repetition and quality folds): every downstream action —
+    # the decontamination report, the census ingest, the near-dup
+    # featurization's two branches and the final write — reads it instead
+    # of re-running the prefix.  The taps above fire in this job with
+    # full counts; the taps below fire in the jobs that read it.
+    df = df.localCheckpoint(eager=True)
+
     # eval-set decontamination BEFORE PII redaction: a leaked eval span
     # containing an email/IP must be matched against the eval set's RAW
     # n-grams — redacting first rewrites the corpus side of exactly those
@@ -223,8 +240,8 @@ def clean_corpus(new_docs: DataFrame, index_dir: str, *,
     # across history strips from the very batch that tips it over
     # min_docs.  Runs on RAW text (after decontamination, which must see
     # raw grams; before passage dedup and redaction, which rewrite
-    # text).  The ingest is one extra pass over the funnel plan at this
-    # point — the same cost class as the dedup internals — and commits
+    # text).  The ingest is one extra pass that reads the materialized
+    # prefix — the same cost class as the dedup internals — and commits
     # via the census's staged swap: pass ``boilerplate_batch_id`` when
     # replays are possible (the streaming twin threads the micro-batch
     # id through) so a replayed batch never double-counts.  Docs whose
@@ -276,8 +293,8 @@ def clean_corpus(new_docs: DataFrame, index_dir: str, *,
     def inner_sink(kept: DataFrame) -> None:
         final = finalize(kept)
         # two sinks over the same accepted set = two executions of the
-        # whole funnel plan; persist for the sink's duration so the
-        # dedup/filter pipeline is paid once (r7 self-review finding)
+        # funnel after the materialized prefix; persist for the sink's
+        # duration so that tail is paid once (r7 self-review finding)
         both = shard_spec is not None and sink is not None
         if both:
             final = final.persist()

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from dbt_demo_spark.operators import dedup
 from dbt_demo_spark.sources.parquet import load_table
-from tests.conftest import SF_GATE
+from tests.conftest import SF_GATE, file_scans_since, last_execution_id
 
 THRESHOLD = 0.5
 
@@ -48,6 +48,24 @@ def test_two_batch_ingest_equals_oneshot(spark, tmp_path):
     assert _ids(k1) | _ids(k2) == oneshot_kept
     # sanity: the corpus has planted dups, so the operator actually dropped
     assert len(oneshot_kept) < docs.count()
+
+
+def test_index_band_rows_scanned_once_per_batch(spark, tmp_path):
+    """A batch against a non-empty index scans the index's band rows
+    (its ``bks`` column) in ONE executed plan: the cross pairs are
+    materialized once and feed both the already-ingested ids and the
+    cross candidates."""
+    docs = load_table(spark, SF_GATE, "documents")
+    idx = str(tmp_path / "mh_index")
+    dedup.incremental_minhash_dedup(docs.filter("doc_id < 250"), idx,
+                                    THRESHOLD)
+    since = last_execution_id(spark)
+    kept = dedup.incremental_minhash_dedup(docs.filter("doc_id >= 250"),
+                                           idx, THRESHOLD)
+    plans = file_scans_since(spark, since)
+    assert sum(any(loc.endswith(idx) and "bks:" in schema
+                   for loc, schema in scans) for scans in plans) == 1
+    assert 0 < kept.count() < docs.filter("doc_id >= 250").count()
 
 
 def test_reingest_is_fully_dropped(spark, tmp_path):

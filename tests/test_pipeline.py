@@ -9,7 +9,7 @@ from dbt_demo_spark.operators import dedup
 from dbt_demo_spark.pipeline import clean_corpus
 from dbt_demo_spark.queries.text_filters import repetition_filter
 from dbt_demo_spark.sources.parquet import load_table
-from tests.conftest import SF_GATE
+from tests.conftest import SF_GATE, file_scans_since, last_execution_id
 
 
 def _run(df):
@@ -83,6 +83,39 @@ def test_decontamination_stage_composes(spark, tmp_path):
                     .selectExpr("keep_id as doc_id"), "doc_id", "left_semi"))
     bad = {r.doc_id for r in contamination_report(upstream, ev).collect()}
     assert n_after == upstream.count() - len(bad)
+
+
+def test_batch_prefix_executes_once(spark, tmp_path):
+    """One batch through every consumer of the row-local prefix — the
+    decontamination report, the census ingest, the near-dup
+    featurization and the final write — executes ONE plan that scans the
+    batch's input file: the prefix is materialized once and each consumer
+    reads that.  The eval set lives in its own file so its scans do not
+    count."""
+    from dbt_demo_spark.operators.quality_frozen import (
+        FROZEN_QUALITY_BIAS, FROZEN_QUALITY_WEIGHTS)
+
+    docs = load_table(spark, SF_GATE, "documents")
+    batch = str(tmp_path / "batch.parquet")
+    evf = str(tmp_path / "eval.parquet")
+    docs.filter("doc_id % 97 <> 0").write.parquet(batch)
+    docs.filter("doc_id % 97 = 0").write.parquet(evf)
+    since = last_execution_id(spark)
+    clean, obs = clean_corpus(
+        spark.read.parquet(batch), str(tmp_path / "idx"),
+        eval_docs=spark.read.parquet(evf), min_matched=50,
+        quality_model=(list(FROZEN_QUALITY_WEIGHTS), FROZEN_QUALITY_BIAS),
+        min_quality_margin=0.0,
+        boilerplate_census_dir=str(tmp_path / "census"),
+        boilerplate_batch_id=0)
+    clean.write.parquet(str(tmp_path / "out"))
+    plans = file_scans_since(spark, since)
+    assert sum(any(loc.endswith(batch) for loc, _ in scans)
+               for scans in plans) == 1
+    counts = {k: o.get["rows"] for k, o in obs.items()}
+    assert counts["ingested"] == spark.read.parquet(batch).count()
+    assert counts["accepted"] == spark.read.parquet(
+        str(tmp_path / "out")).count() > 0
 
 
 def test_decontamination_sees_raw_text_before_redaction(spark, tmp_path):

@@ -14,6 +14,7 @@ import pyspark.sql.functions as F
 
 from dbt_demo_spark.core.model import ModelRegistry
 from dbt_demo_spark.core.runner import Runner
+from tests.conftest import last_execution_id
 
 
 def _write_src(spark, path: str, days):
@@ -327,15 +328,6 @@ def _count_jobs_since(spark, last_id: int) -> int:
     return n
 
 
-def _last_execution_id(spark) -> int:
-    it = (spark._jsparkSession.sharedState().statusStore()
-          .executionsList().iterator())
-    last = -1
-    while it.hasNext():
-        last = max(last, it.next().executionId())
-    return last
-
-
 def test_noop_changed_build_reuses_every_test_with_zero_count_jobs(
         spark, tmp_path):
     import json
@@ -348,7 +340,7 @@ def test_noop_changed_build_reuses_every_test_with_zero_count_jobs(
 
     # a NEW Runner over the same warehouse reuses, as it reuses skips
     r = Runner(spark, _tested_registry(tmp_path), wh)
-    before = _last_execution_id(spark)
+    before = last_execution_id(spark)
     res = r.build(_tested_sources(spark, tmp_path), refresh="changed")
     assert _count_jobs_since(spark, before) == 0
     assert res.ok

@@ -236,3 +236,30 @@ def test_lsh_index_two_thread_cold_start_builds_once(spark, tmp_path,
     assert out["sim_topk_lsh"] == _rows(sim_topk_lsh_inline(spark, d))
     assert out["dedup_embedding_cosine"] == _rows(
         dedup_embedding_cosine_inline(spark, d))
+
+
+def test_indexed_verify_raises_on_stale_gather_matrix(spark, tmp_path):
+    """The indexed verify gathers both vectors of a pair by id.  An id the
+    matrix lacks — between two ids, before the first or past the last —
+    raises instead of scoring the row the sorted search lands on; the
+    task-resident cache keeps one matrix only."""
+    import numpy as np
+    import pytest
+
+    from dbt_demo_spark.operators import similarity
+
+    index = similarity.build_lsh_index(
+        load_table(spark, SF_GATE, "embeddings"), str(tmp_path / "lsh"))
+    files = tuple(sorted(index.inputFiles()))
+    ids, _, _ = similarity._gather_matrix(files)
+    assert (similarity._gather_rows(ids, ids[::-1])
+            == np.arange(len(ids))[::-1]).all()
+    mid = len(ids) // 2
+    for stale, missing in ((np.delete(ids, mid), ids[mid]),
+                           (ids[1:], ids[0]),
+                           (ids[:-1], ids[-1]),
+                           (ids, ids[-1] + 1)):
+        with pytest.raises(ValueError, match="stale"):
+            similarity._gather_rows(stale, np.array([ids[mid], missing]))
+    similarity._gather_matrix(files[:1])
+    assert list(similarity._GATHER_CACHE) == [files[:1]]
