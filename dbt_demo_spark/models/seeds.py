@@ -101,8 +101,11 @@ def seed_rows(name: str) -> list[tuple]:
 
 def load_seed_dataframes(spark: SparkSession) -> dict[str, DataFrame]:
     """The `dbt seed` analog: seed relations as DataFrames with explicit
-    schemas (reference: README.md:47-48)."""
-    return {n: spark.createDataFrame(_ROWS[n], SEED_SCHEMAS[n]) for n in _ROWS}
+    schemas (reference: README.md:47-48).  One partition each, like the
+    one CSV file a dbt seed is: aggregates then sum doubles in file
+    order, as DuckDB does over the same rows."""
+    return {n: spark.createDataFrame(_ROWS[n], SEED_SCHEMAS[n]).coalesce(1)
+            for n in _ROWS}
 
 
 def seed_csv_text(name: str) -> str:

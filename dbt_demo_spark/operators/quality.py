@@ -125,11 +125,14 @@ def train_quality_classifier(pos_docs: DataFrame, neg_docs: DataFrame,
     w = np.zeros(dim)
     b = 0.0
     n = max(len(texts), 1)
+    # elementwise products + numpy's pairwise sum, not BLAS matmuls:
+    # BLAS's summation order depends on its thread count, and the
+    # retrain must reproduce the frozen weights on any host
     for _ in range(epochs):
-        z = X @ w + b
+        z = (X * w).sum(axis=1) + b
         p = 1.0 / (1.0 + np.exp(-z))
         g = p - y
-        w -= lr * ((X.T @ g) / n + l2 * w)
+        w -= lr * ((X * g[:, None]).sum(axis=0) / n + l2 * w)
         b -= lr * float(g.mean())
     return [float(v) for v in w], float(b)
 

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import hashlib
 import os
-import threading
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -32,7 +31,8 @@ from ..functions.vectors import (as_double, cosine, lsh_bucket, sql_cosine,
                                  sql_lsh_bucket, sql_norm, sql_probe_join)
 from ..operators import dedup, similarity
 from ..sources.events import load_events
-from ..sources.parquet import load_table, spread
+from ..sources.parquet import (artifact_dir, build_once, load_table,
+                               mart_cache_dir, path_digest, spread)
 from .catalog import query
 
 # ---------------------------------------------------------------------------
@@ -153,13 +153,11 @@ _MAX_BUCKET = 16
 # dedup rows both consume the SAME (doc_id, bks, ss, n) shingle-feature
 # table, and featurization is the dominant per-query cost — so the table
 # is materialized ONCE per (session, corpus snapshot) under .mart_cache
-# (same build-once discipline as bucketed_order_marts and the IVF index;
-# features are a pure function of the text, so a dir surviving from an
-# earlier session over the same immutable corpus is still valid) and both
-# rows serve from the parquet read-back.  Pair sets are identical to the
-# inline path (X29 equality tests + the rows' own DuckDB oracles).
-_DEDUP_FEATURES: dict = {}
-_DEDUP_FEATURES_LOCK = __import__("threading").Lock()
+# (`build_once`, keyed by the corpus digest; features are a pure function
+# of the text, so a dir surviving from an earlier session over the same
+# immutable corpus is still valid) and both rows serve from the parquet
+# read-back.  Pair sets are identical to the inline path (X29 equality
+# tests + the rows' own DuckDB oracles).
 
 
 def _corpus_digest(sf_dir: str) -> str:
@@ -182,23 +180,16 @@ def _corpus_digest(sf_dir: str) -> str:
 
 
 def _corpus_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    digest = _corpus_digest(sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, digest)
-    # lock: the bench throughput phase runs catalog queries on a thread
-    # pool; two cold-start dedup rows must not both build the table
-    with _DEDUP_FEATURES_LOCK:
-        feats = _DEDUP_FEATURES.get(key)
-        if feats is None:
-            from ..sources.parquet import mart_cache_dir
+    return _features_at(spark, sf_dir, _corpus_digest(sf_dir))
 
-            path = mart_cache_dir(sf_dir, "dedup_features", digest=digest)
-            if os.path.exists(os.path.join(path, "_SUCCESS")):
-                feats = dedup.load_features(spark, path)
-            else:
-                feats = dedup.materialize_features(
-                    load_table(spark, sf_dir, "documents"), path)
-            _DEDUP_FEATURES[key] = feats
-    return feats
+
+@build_once
+def _features_at(spark: SparkSession, sf_dir: str, digest: str) -> DataFrame:
+    path = mart_cache_dir(sf_dir, "dedup_features", digest=digest)
+    if os.path.exists(os.path.join(path, "_SUCCESS")):
+        return dedup.load_features(spark, path)
+    return dedup.materialize_features(
+        load_table(spark, sf_dir, "documents"), path)
 
 
 @query("dedup_minhash_lsh_guarded", oracle=_minhash_oracle(_MAX_BUCKET),
@@ -360,21 +351,20 @@ _LSH_TOPK_ORACLE = f"""
 """
 
 
-_LSH_INDEXES: dict = {}
-
-
+@build_once
 def _lsh_serving_index(spark: SparkSession, sf_dir: str):
     """Persisted LSH index for sf_dir's embeddings (r14): the corpus
-    bucketize pass is a MATERIALIZATION (build-once, bucket-on-write —
-    operators/similarity.build_lsh_index), not per-query work — the same
-    session-index lifecycle as the IVF/PQ/BM25 rows.  The receipted
-    motivation: the inline row's corpus bucketize dominated its wall
-    (SESSION_LSH_RECEIPT r13: inline LOSES to brute at small corpora;
-    ANN_DISPATCH_RECEIPT r14: indexed 0.53s vs inline 0.72s serve)."""
-    return _session_index(
-        _LSH_INDEXES, ".lsh_index", spark, sf_dir,
-        lambda path: similarity.build_lsh_index(
-            load_table(spark, sf_dir, "embeddings"), path))
+    bucketize pass is a MATERIALIZATION (build-once via `build_once`,
+    bucket-on-write — operators/similarity.build_lsh_index), not
+    per-query work — the same lifecycle as the IVF/PQ/BM25 rows.  The
+    receipted motivation: the inline row's corpus bucketize dominated
+    its wall (SESSION_LSH_RECEIPT r13: inline LOSES to brute at small
+    corpora; ANN_DISPATCH_RECEIPT r14: indexed 0.53s vs inline 0.72s
+    serve).  sim_topk_lsh and dedup_embedding_cosine share it; two cold
+    callers build it once (tests/test_semdedup.py runs that race)."""
+    return similarity.build_lsh_index(
+        load_table(spark, sf_dir, "embeddings"),
+        artifact_dir(".lsh_index", sf_dir))
 
 
 @query(
@@ -409,62 +399,19 @@ def sim_topk_lsh_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
-# persisted indexes live under <repo>/<subdir>/<tag>; one build lock per
-# index kind (the subdir), never held across another _session_index call,
-# so builds cannot deadlock on each other
-_INDEX_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__))))
-_SESSION_INDEX_LOCKS: dict = {}
-
-
-# the synthetic embeddings are near-uniform (max pairwise cosine ~0.46 at
-# sf0.01), so the catalog query uses a low threshold to exercise the
-# operator on real rows; true dup recovery at ~1.0 is pytest-verified with
-# planted duplicates (test_operators.py)
-def _session_index(cache: dict, subdir: str, spark: SparkSession,
-                   sf_dir: str, build_fn):
-    """Build-once-per-(session, sf_dir) persisted-index memo shared by the
-    IVF, PQ and LSH catalog rows: the index is a materialization, not
-    per-query work.  The on-disk tag hashes the ABSOLUTE dir (basename kept
-    for readability): two sf_dirs sharing a basename must not share an
-    on-disk index path, or the second build silently overwrites the corpus
-    the first handle still reads.  Double-checked under a per-kind lock:
-    two cold callers of one index (sim_topk_lsh and dedup_embedding_cosine
-    share the LSH index) must not both overwrite-write the same path
-    (tests/test_semdedup.py runs that race)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = cache.get(key)
-    if idx is not None:
-        return idx
-    with _SESSION_INDEX_LOCKS.setdefault(subdir, threading.Lock()):
-        idx = cache.get(key)
-        if idx is None:
-            abs_dir = os.path.abspath(sf_dir)
-            digest = hashlib.sha1(abs_dir.encode()).hexdigest()[:8]
-            tag = (f"{os.path.basename(os.path.normpath(abs_dir)) or 'default'}"
-                   f"-{digest}")
-            idx = build_fn(os.path.join(_INDEX_ROOT, subdir, tag))
-            cache[key] = idx
-    return idx
-
-
-_IVF_INDEXES: dict = {}
-
-
+@build_once
 def _ivf_index(spark: SparkSession, sf_dir: str):
     """Persisted IVF-Flat index for sf_dir's embeddings: assign the corpus
     to the FROZEN offline-trained quantizer (tools/freeze_ivf.py — the
     train-once / serve-many lifecycle; the TRAINING path stays
     pytest-covered via operators/ivf.train_quantizer), write it
-    partitioned by cluster_id."""
+    partitioned by cluster_id, once per (session, sf_dir)."""
     from ..operators import ivf
     from ..operators.ivf_frozen import FROZEN_CENTROIDS
 
-    return _session_index(
-        _IVF_INDEXES, ".ivf_index", spark, sf_dir,
-        lambda path: ivf.build_index(
-            load_table(spark, sf_dir, "embeddings"), path,
-            centroids=FROZEN_CENTROIDS))
+    return ivf.build_index(
+        load_table(spark, sf_dir, "embeddings"),
+        artifact_dir(".ivf_index", sf_dir), centroids=FROZEN_CENTROIDS)
 
 
 def _ivf_oracle() -> str:
@@ -549,9 +496,7 @@ def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
-_PQ_INDEXES: dict = {}
-
-
+@build_once
 def _pq_index(spark: SparkSession, sf_dir: str):
     """Persisted IVF-PQ index: the corpus assigned to the FROZEN coarse
     centroids and PQ-ENCODED against the FROZEN codebooks
@@ -562,11 +507,10 @@ def _pq_index(spark: SparkSession, sf_dir: str):
     from ..operators.ivf_frozen import FROZEN_CENTROIDS
     from ..operators.pq_frozen import FROZEN_CODEBOOKS
 
-    return _session_index(
-        _PQ_INDEXES, ".pq_index", spark, sf_dir,
-        lambda path: pq.build_pq_index(
-            load_table(spark, sf_dir, "embeddings"), path,
-            centroids=FROZEN_CENTROIDS, codebooks=FROZEN_CODEBOOKS))
+    return pq.build_pq_index(
+        load_table(spark, sf_dir, "embeddings"),
+        artifact_dir(".pq_index", sf_dir),
+        centroids=FROZEN_CENTROIDS, codebooks=FROZEN_CODEBOOKS)
 
 
 def _pq_oracle() -> str:
@@ -802,9 +746,7 @@ def pq_residual_oracle() -> str:
 """
 
 
-_PQR_INDEXES: dict = {}
-
-
+@build_once
 def _pq_residual_index(spark: SparkSession, sf_dir: str):
     """Persisted residual IVF-PQ (IVFADC) index: same frozen coarse
     quantizer as _pq_index, but each corpus vector's RESIDUAL
@@ -815,12 +757,11 @@ def _pq_residual_index(spark: SparkSession, sf_dir: str):
     from ..operators.ivf_frozen import FROZEN_CENTROIDS
     from ..operators.pq_residual_frozen import FROZEN_RESIDUAL_CODEBOOKS
 
-    return _session_index(
-        _PQR_INDEXES, ".pqr_index", spark, sf_dir,
-        lambda path: pq.build_pq_index(
-            load_table(spark, sf_dir, "embeddings"), path,
-            centroids=FROZEN_CENTROIDS,
-            codebooks=FROZEN_RESIDUAL_CODEBOOKS, residual=True))
+    return pq.build_pq_index(
+        load_table(spark, sf_dir, "embeddings"),
+        artifact_dir(".pqr_index", sf_dir),
+        centroids=FROZEN_CENTROIDS,
+        codebooks=FROZEN_RESIDUAL_CODEBOOKS, residual=True)
 
 
 @query(
@@ -851,6 +792,10 @@ def sim_topk_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("rank", F.col("rank").cast("int"))
 
 
+# the synthetic embeddings are near-uniform (max pairwise cosine ~0.46 at
+# sf0.01), so the catalog query uses a low threshold to exercise the
+# operator on real rows; true dup recovery at ~1.0 is pytest-verified with
+# planted duplicates (test_operators.py)
 _EMB_DUP_THRESHOLD = 0.3
 
 _EMB_NEAR_DUP_ORACLE = f"""
@@ -1284,10 +1229,7 @@ def events_hourly_rollup_rawscan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_HOURLY_GRAIN_MARTS: dict = {}
-_HOURLY_GRAIN_LOCK = __import__("threading").Lock()
-
-
+@build_once
 def hourly_user_grain_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once (hour_start, event_type, user_id)-grain mart for the
     hourly rollup family (r13).  Stores per-grain-row associative
@@ -1302,31 +1244,13 @@ def hourly_user_grain_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy(hour_start, event_type) requires (partition keys ⊆ group
     keys), so every hourly rollup over the mart runs with ZERO
     exchange.  The one user-grain shuffle is paid at build, amortized
-    over every serve (dbt posture, same as bucketed_order_marts /
-    monthly_grain_marts)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    rels = _HOURLY_GRAIN_MARTS.get(key)
-    if rels is not None:
-        return rels
-    with _HOURLY_GRAIN_LOCK:
-        rels = _HOURLY_GRAIN_MARTS.get(key)
-        if rels is None:
-            rels = _build_hourly_user_grain_mart(spark, sf_dir)
-            _HOURLY_GRAIN_MARTS[key] = rels
-    return rels
-
-
-def _build_hourly_user_grain_mart(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    import hashlib
-    import os
-
+    over every serve (dbt posture; built once per (session, sf_dir) by
+    `build_once`)."""
     from ..core.model import ModelDef, ModelRegistry
     from ..core.runner import Runner
-    from ..sources.parquet import mart_cache_dir
     from ..session import mart_buckets
 
-    digest = hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+    digest = path_digest(sf_dir)
     name = f"mart_hourly_user_grain_{digest}"
     reg = ModelRegistry()
     reg.register(ModelDef(

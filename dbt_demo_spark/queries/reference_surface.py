@@ -16,15 +16,12 @@ doubles in different orders; rounding collapses last-ulp drift).
 
 from __future__ import annotations
 
-import hashlib
-import os
-import threading
-
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.numeric import round2, scaled_long, sql_round2, sql_scaled_long
-from ..sources.parquet import load_table, spread
+from ..sources.parquet import (build_once, load_table, mart_cache_dir,
+                               path_digest, spread)
 from .catalog import query
 
 # ---------------------------------------------------------------------------
@@ -359,43 +356,26 @@ def agg_monthly_combined(spark: SparkSession, sf_dir: str) -> DataFrame:
 # §4.2 partition pruning) — the layout claim under the correctness gate
 # ---------------------------------------------------------------------------
 
-_MARTS: dict = {}
-# one lock for all mart cold-start builds: bench warmup/throughput phases
-# run catalog queries on a thread pool, and since r9 FOUR rows (q3/q18/q21
-# + mart_bucketed_revenue) share the bucketed marts — unlocked, two
-# threads race the same _temporary write dir (the first post-layout bench
-# run failed exactly this way)
-_MART_BUILD_LOCK = threading.Lock()
-
-
+@build_once
 def month_partitioned_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Materialize-once month-partitioned orders mart (the dbt `table`
     materialization with `partitionBy` layout, reference dbt_project.yml:21-22
-    as extended by core/runner.py).  Built one time per (session, sf_dir) —
-    a mart is a materialization, not per-query work — under the repo-local
-    .mart_cache dir, keyed by a hash of the absolute sf_dir so same-basename
-    dirs never collide (same discipline as the IVF index)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    with _MART_BUILD_LOCK:
-        df = _MARTS.get(key)
-        if df is None:
-            from ..sources.parquet import mart_cache_dir
-
-            path = mart_cache_dir(sf_dir, "orders_monthly_mart")
-            orders = load_table(spark, sf_dir, "orders")
-            mart = (
-                orders.groupBy(
-                    F.date_trunc("month", "o_orderdate").cast("date")
-                     .alias("month_start"),
-                    F.col("o_orderstatus").alias("order_status"))
-                .agg(F.countDistinct("o_orderkey").alias("orders_placed"),
-                     round2(F.sum("o_totalprice")).alias("total_amount"))
-            )
-            mart.write.mode("overwrite").partitionBy("month_start") \
-                .parquet(path)
-            df = spark.read.parquet(path)
-            _MARTS[key] = df
-    return df
+    as extended by core/runner.py).  Built one time per (session, sf_dir)
+    by `build_once` — a mart is a materialization, not per-query work —
+    under the repo-local .mart_cache dir, keyed by a hash of the absolute
+    sf_dir so same-basename dirs never collide."""
+    path = mart_cache_dir(sf_dir, "orders_monthly_mart")
+    orders = load_table(spark, sf_dir, "orders")
+    mart = (
+        orders.groupBy(
+            F.date_trunc("month", "o_orderdate").cast("date")
+             .alias("month_start"),
+            F.col("o_orderstatus").alias("order_status"))
+        .agg(F.countDistinct("o_orderkey").alias("orders_placed"),
+             round2(F.sum("o_totalprice")).alias("total_amount"))
+    )
+    mart.write.mode("overwrite").partitionBy("month_start").parquet(path)
+    return spark.read.parquet(path)
 
 
 @query(
@@ -425,19 +405,16 @@ def mart_month_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKETED_MARTS: dict = {}
-
-
+@build_once
 def bucketed_order_marts(spark: SparkSession, sf_dir: str):
     """Build-once BUCKETED orders/lineitem marts through the real Runner
     path (core/runner.py bucket_by materialization): both marts hash-
     clustered and sorted on the order key with the same bucket count, so
     the fact-to-fact join downstream needs no exchange — the shuffle is
     paid once per build, not per query.  Materialize-once per
-    (session, sf_dir) under .mart_cache with a digest tag (same
-    discipline as month_partitioned_mart and the IVF index); catalog
-    table names carry the digest so two sf_dirs never collide in the
-    session catalog.
+    (session, sf_dir) by `build_once` under .mart_cache with a digest
+    tag; catalog table names carry the digest so two sf_dirs never
+    collide in the session catalog.
 
     The marts carry the column union needed by every row they serve
     (mart_bucketed_revenue + the orderkey-join TPC-H tail q3/q9/q18/q21 —
@@ -447,29 +424,11 @@ def bucketed_order_marts(spark: SparkSession, sf_dir: str):
     dominated the tail (TPCH_TAIL.json measured -55% on q3/q21, results
     identical).  This is the dbt posture: marts are materialized WITH a
     layout precisely so downstream queries don't re-shuffle."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    rels = _BUCKETED_MARTS.get(key)
-    if rels is not None:
-        return rels
-    # serialize cold-start builds: since r9 four catalog rows share these
-    # marts, and the bench warmup phase calls them on a thread pool —
-    # unlocked, two threads race the same _temporary write dir
-    with _MART_BUILD_LOCK:
-        rels = _BUCKETED_MARTS.get(key)
-        if rels is None:
-            rels = _build_bucketed_order_marts(spark, sf_dir)
-            _BUCKETED_MARTS[key] = rels
-    return rels
-
-
-def _build_bucketed_order_marts(spark: SparkSession, sf_dir: str):
     from ..core.model import ModelDef, ModelRegistry
     from ..core.runner import Runner
-    from ..sources.parquet import mart_cache_dir
     from ..session import mart_buckets
 
-    abs_dir = os.path.abspath(sf_dir)
-    digest = hashlib.sha1(abs_dir.encode()).hexdigest()[:8]
+    digest = path_digest(sf_dir)
     o_name = f"mart_orders_bk_{digest}"
     l_name = f"mart_lineitem_bk_{digest}"
     reg = ModelRegistry()
@@ -493,9 +452,7 @@ def _build_bucketed_order_marts(spark: SparkSession, sf_dir: str):
     return (out[o_name], out[l_name])
 
 
-_GRAIN_MARTS: dict = {}
-
-
+@build_once
 def monthly_grain_marts(spark: SparkSession, sf_dir: str):
     """Build-once (ORDER KEY, MONTH)-grain marts for the monthly rollup
     family (r12, VERDICT r11 item 6).  The r12 decomposition receipt
@@ -518,31 +475,11 @@ def monthly_grain_marts(spark: SparkSession, sf_dir: str):
       orders_grain   (o_orderkey, month_start, order_status, n, v)
       lineitem_grain (l_orderkey, month_start, n, v, q)
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    rels = _GRAIN_MARTS.get(key)
-    if rels is not None:
-        return rels
-    # resolve the upstream bucketed marts BEFORE taking the build lock:
-    # bucketed_order_marts acquires the same (non-reentrant) lock, and
-    # calling it from inside would self-deadlock (r12)
-    upstream = bucketed_order_marts(spark, sf_dir)
-    with _MART_BUILD_LOCK:
-        rels = _GRAIN_MARTS.get(key)
-        if rels is None:
-            rels = _build_monthly_grain_marts(spark, sf_dir, upstream)
-            _GRAIN_MARTS[key] = rels
-    return rels
-
-
-def _build_monthly_grain_marts(spark: SparkSession, sf_dir: str,
-                               upstream) -> tuple:
     from ..core.model import ModelDef, ModelRegistry
     from ..core.runner import Runner
-    from ..sources.parquet import mart_cache_dir
 
-    o_mart, li_mart = upstream
-    abs_dir = os.path.abspath(sf_dir)
-    digest = hashlib.sha1(abs_dir.encode()).hexdigest()[:8]
+    o_mart, li_mart = bucketed_order_marts(spark, sf_dir)
+    digest = path_digest(sf_dir)
     og_name = f"mart_orders_grain_{digest}"
     lg_name = f"mart_lineitem_grain_{digest}"
     reg = ModelRegistry()

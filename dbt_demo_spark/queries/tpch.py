@@ -110,8 +110,8 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, and the group-by keys include the bucket key so the
     aggregate is exchange-free too — the only movement left is the
     top-10 TakeOrdered.  tpch_q3_rawscan keeps the raw-table twin for
-    the both-numbers receipt (tools/layout_receipt.py,
-    LAYOUT_DECISION.json) and the equivalence pytest."""
+    the both-numbers receipt (LAYOUT_DECISION.json) and the equivalence
+    pytest."""
     from .reference_surface import bucketed_order_marts
 
     o, li = bucketed_order_marts(spark, sf_dir)

@@ -8,27 +8,64 @@ read narrow bytes (verify with `.explain`: ReadSchema / PushedFilters).
 
 from __future__ import annotations
 
+import functools
 import hashlib
 import os
+import threading
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
+# artifact roots (.mart_cache, .lsh_index, ...) live under the repo root
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
+
+
+def path_digest(sf_dir: str) -> str:
+    """Short hash of the ABSOLUTE dir: two dirs sharing a basename never
+    share an artifact path or a catalog table name."""
+    return hashlib.sha1(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
+
+
+def artifact_dir(root: str, sf_dir: str, *parts: str,
+                 digest: str | None = None) -> str:
+    """``<repo>/<root>/<basename>-<digest>/<parts...>`` for a corpus dir.
+    Digest defaults to path_digest; callers with a content stamp
+    (llm_pipeline._corpus_digest) pass their own."""
+    abs_dir = os.path.abspath(sf_dir)
+    tag = (f"{os.path.basename(os.path.normpath(abs_dir)) or 'default'}"
+           f"-{digest or path_digest(sf_dir)}")
+    return os.path.join(REPO_ROOT, root, tag, *parts)
+
 
 def mart_cache_dir(sf_dir: str, *parts: str, digest: str | None = None) -> str:
-    """The repo-local build-once materialization root for a corpus dir:
-    ``<repo>/.mart_cache/<basename>-<digest>/<parts...>``.  Digest
-    defaults to a hash of the absolute path (same-basename dirs never
-    collide); callers with a content stamp (llm_pipeline._corpus_digest)
-    pass their own.  ONE definition — the pattern was copy-pasted three
-    times before (r7 self-review finding)."""
-    abs_dir = os.path.abspath(sf_dir)
-    if digest is None:
-        digest = hashlib.sha1(abs_dir.encode()).hexdigest()[:8]
-    tag = f"{os.path.basename(os.path.normpath(abs_dir)) or 'default'}-{digest}"
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    return os.path.join(repo, ".mart_cache", tag, *parts)
+    """The build-once materialization root: ``<repo>/.mart_cache/...``."""
+    return artifact_dir(".mart_cache", sf_dir, *parts, digest=digest)
+
+
+def build_once(build):
+    """Memoize an artifact builder ``build(spark, sf_dir, *args)`` per
+    ``(applicationId, sf_dir, *args)``: a mart or index is a
+    materialization, built once per session and then served.  The key
+    uses sf_dir as passed.  Double-checked under one lock per artifact:
+    concurrent cold callers (the bench's thread pool) build once, and a
+    builder may resolve another artifact inside its build because that
+    one holds its own lock.  A build that raises memoizes nothing."""
+    built: dict = {}
+    lock = threading.Lock()
+
+    @functools.wraps(build)
+    def resolve(spark: SparkSession, sf_dir: str, *args):
+        key = (spark.sparkContext.applicationId, sf_dir, *args)
+        out = built.get(key)
+        if out is None:
+            with lock:
+                out = built.get(key)
+                if out is None:
+                    out = built[key] = build(spark, sf_dir, *args)
+        return out
+    return resolve
+
 
 TESTDATA_TABLES = (
     "region", "nation", "customer", "supplier", "part",

@@ -238,7 +238,7 @@ def test_layout_served_tpch_rows_match_rawscan_twins(spark):
     q18 aggregate-reuse rewrite) must never change answers.  The DuckDB
     oracle over raw tables remains the primary gate (test_catalog_parity);
     this pins the Spark-vs-Spark pair the both-numbers receipt
-    (tools/layout_receipt.py) relies on."""
+    (LAYOUT_DECISION.json) relies on."""
     from dbt_demo_spark.queries import CATALOG
     from dbt_demo_spark.queries.tpch import (tpch_q3_rawscan,
                                              tpch_q18_rawscan)

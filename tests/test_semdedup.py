@@ -162,16 +162,16 @@ def test_semantic_dedup_keeps_centroid_nearest(spark):
 
 
 def _private_corpus(tmp_path, monkeypatch):
-    """A corpus dir no other test has indexed, with the persisted indexes
-    redirected under tmp_path: every _session_index lookup starts cold."""
+    """A corpus dir no other test has indexed, with the persisted artifacts
+    redirected under tmp_path: every index lookup starts cold."""
     import shutil
 
-    from dbt_demo_spark.queries import llm_pipeline
+    from dbt_demo_spark.sources import parquet
 
     d = tmp_path / "corpus"
     d.mkdir()
     shutil.copy(f"{SF_GATE}/embeddings.parquet", d / "embeddings.parquet")
-    monkeypatch.setattr(llm_pipeline, "_INDEX_ROOT", str(tmp_path))
+    monkeypatch.setattr(parquet, "REPO_ROOT", str(tmp_path))
     return str(d)
 
 
