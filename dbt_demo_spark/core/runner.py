@@ -51,6 +51,7 @@ from urllib.parse import unquote, urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from .datatests import DataTestResult, run_data_tests
 from .model import ModelRegistry
@@ -68,6 +69,12 @@ class NodeResult:
     error: str | None = None          # model exception, if any
     tests: list[DataTestResult] = field(default_factory=list)
     seconds: float = 0.0              # model + attached-test wall time
+    # per-artifact ledger of a table/incremental node (None otherwise):
+    # served from recorded build state, and the data files and bytes
+    # its table directory holds, from the build-state file stamps
+    reused: bool = False
+    files: int | None = None
+    bytes: int | None = None
 
 
 @dataclass
@@ -95,6 +102,9 @@ class BuildResult:
                     "status": n.status,
                     "error": n.error,
                     "seconds": round(n.seconds, 3),
+                    "reused": n.reused,
+                    "files": n.files,
+                    "bytes": n.bytes,
                     "tests": [{"name": t.name, "passed": t.passed,
                                "violations": t.violations,
                                "severity": t.severity,
@@ -162,6 +172,8 @@ class Runner:
         self._fp_memo: dict[str, str | None] = {}
         self._fp_lock = threading.Lock()
         self.last_refresh_report: dict = {"built": [], "skipped": []}
+        # per-run artifact ledger: model -> NodeResult's reused/files/bytes
+        self._ledger: dict[str, dict] = {}
         # X96: model -> list of "[lo .. hi)" batch windows built last run
         self.last_microbatch_report: dict = {}
 
@@ -178,8 +190,9 @@ class Runner:
 
     def _save_state(self, key: str, value) -> None:
         """Record (or, with None, drop) one build-state entry: a model's
-        build fingerprint under its name, or a node's passing test
-        outcomes under ``tests:<name>``.  Read-modify-write under the
+        build record (fingerprint, read-back schema, file stamps) under
+        its name, or a node's passing test outcomes under
+        ``tests:<name>``.  Read-modify-write under the
         lock (parallel runs build disjoint models, but they share this
         file); atomic rename so a crashed write can never half-corrupt
         the JSON into false skips."""
@@ -275,13 +288,20 @@ class Runner:
         [public knowledge] applied at the file layer): a model's
         fingerprint chains its fn's source code, its materialization
         params, every upstream model's fingerprint, and the (path, size,
-        mtime) of every FILE its source relations scan.  Unchanged ->
-        read the existing table back (no rebuild: only the parquet schema
-        read runs a job); any unknowable input (non-file source,
-        unreadable fn source, bucketed catalog table) -> rebuilt, never
-        guessed.  ``last_refresh_report`` lists
-        what was built vs skipped.  ``build`` extends the same rule to
-        data tests: see there."""
+        mtime) of every FILE its source relations scan.  Each build
+        records that fingerprint with the schema it read the table back
+        with and the (path, size, mtime_ns) of every file in the table
+        directory.  Unchanged upstream AND unchanged table files -> the
+        table is served with the recorded schema: no rebuild, no schema
+        inference, no Spark job (a partitioned table with more leaf
+        directories than
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` still
+        lists them in one).  A table changed outside the runner, a
+        legacy entry without the record, or any unknowable input
+        (non-file source, unreadable fn source, bucketed catalog table)
+        -> rebuilt, never guessed.  ``last_refresh_report`` lists what
+        was built vs skipped.  ``build`` extends the same rule to data
+        tests: see there."""
         if refresh not in ("full", "changed"):
             raise ValueError(f"refresh must be 'full' or 'changed', "
                              f"got {refresh!r}")
@@ -301,6 +321,7 @@ class Runner:
         self._empty = empty
         self._batch_id = batch_id
         self._fp_memo: dict[str, str | None] = {}
+        self._ledger = {}
         self.last_refresh_report = {"built": [], "skipped": []}
         caches = []
         if cache_sources:
@@ -364,7 +385,12 @@ class Runner:
         fingerprints meaning equal data.  ``full_refresh`` and ``empty``
         never reuse.  Reused
         outcomes carry ``reused=True`` (``run_results.json`` too), and
-        ``last_refresh_report["tests_reused"]`` names them."""
+        ``last_refresh_report["tests_reused"]`` names them.
+
+        Each table/incremental node's ``NodeResult`` (and its
+        ``run_results.json`` row) is also a build-ledger entry:
+        ``reused`` (served from recorded build state), and the ``files``
+        and ``bytes`` of the data files in its table directory."""
         if refresh not in ("full", "changed"):
             raise ValueError(f"refresh must be 'full' or 'changed', "
                              f"got {refresh!r}")
@@ -383,6 +409,7 @@ class Runner:
         self._empty = empty
         self._batch_id = None
         self._fp_memo = {}
+        self._ledger = {}
         self.last_refresh_report = {"built": [], "skipped": [],
                                     "tests_reused": []}
 
@@ -465,13 +492,14 @@ class Runner:
                     relations[name] = df
                     # warn-severity test failures record but never gate
                     # (dbt severity: warn [public knowledge])
+                    led = self._ledger.get(name, {})
                     if all(t.gating for t in trs):
                         nodes[name] = NodeResult(name, "success", tests=trs,
-                                                 seconds=secs)
+                                                 seconds=secs, **led)
                         built.add(name)
                     else:
                         nodes[name] = NodeResult(name, "fail", tests=trs,
-                                                 seconds=secs)
+                                                 seconds=secs, **led)
                         poisoned.add(name)
 
     def retry(self, sources: dict[str, DataFrame], prior: "BuildResult",
@@ -632,12 +660,17 @@ class Runner:
 
     def _try_skip(self, name: str, mdef,
                   relations: dict[str, DataFrame]) -> DataFrame | None:
-        """refresh="changed": reuse the existing materialization when the
-        upstream fingerprint matches the recorded one.  Only plain
-        path-backed layouts (table without buckets, incremental) are
-        skippable — a bucketed model's bucket metadata lives in the
-        session catalog, which a fresh session does not carry, so it
-        rebuilds rather than silently losing its zero-exchange property."""
+        """refresh="changed": serve the existing materialization when the
+        upstream fingerprint matches the recorded one AND the table
+        directory's file stamps match the ones recorded after its build,
+        reading it with the recorded read-back schema — no schema
+        inference, so no Spark job.  A table changed outside the runner
+        (a file added, removed or rewritten) or a legacy entry holding a
+        bare fingerprint rebuilds instead.  Only plain path-backed
+        layouts (table without buckets, incremental) are skippable — a
+        bucketed model's bucket metadata lives in the session catalog,
+        which a fresh session does not carry, so it rebuilds rather than
+        silently losing its zero-exchange property."""
         if (not self._refresh_changed
                 or mdef.materialized not in ("table", "incremental")
                 or mdef.bucket_by):
@@ -646,9 +679,66 @@ class Runner:
         if not os.path.isdir(path):
             return None
         fp = self._fingerprint(name, relations)
-        if fp is None or self._load_state().get(name) != fp:
+        rec = self._load_state().get(name)
+        if fp is None or not isinstance(rec, dict) \
+                or rec["fingerprint"] != fp:
             return None
-        return self._read_back(name, path)
+        stamps = self._file_stamps(path)
+        if stamps != rec["files"]:
+            return None
+        out = (self.spark.read.schema(StructType.fromJson(rec["schema"]))
+               .parquet(path))
+        out.createOrReplaceTempView(name)
+        self._note_ledger(name, True, stamps)
+        return out
+
+    @staticmethod
+    def _file_stamps(path: str) -> list[list]:
+        """[relative path, size, mtime_ns] of every file under a table
+        directory, sorted — file metadata only, no Spark job (the
+        table-side counterpart of ``_source_fingerprint``'s stat)."""
+        stamps = []
+        for root, _dirs, files in os.walk(path):
+            for f in files:
+                st = os.stat(os.path.join(root, f))
+                stamps.append([os.path.relpath(os.path.join(root, f), path),
+                               st.st_size, st.st_mtime_ns])
+        return sorted(stamps)
+
+    def _note_ledger(self, name: str, reused: bool, stamps: list) -> None:
+        """Ledger entry of one table: the data files a reader scans (no
+        ``_``/``.``-prefixed metadata or checksum file) and their bytes."""
+        data = [s for s in stamps
+                if os.path.basename(s[0])[:1] not in ("_", ".")]
+        self._ledger[name] = {"reused": reused, "files": len(data),
+                              "bytes": sum(s[1] for s in data)}
+
+    def _record_build(self, name: str, mdef, relations: dict[str, DataFrame],
+                      df: DataFrame) -> None:
+        """After a table/incremental build: note its ledger entry and, for
+        a skippable (unbucketed) model outside an ``empty`` run, record
+        its build state — the fingerprint, the read-back schema and the table's
+        file stamps, which ``_try_skip`` must all see again to skip.
+        Recorded on EVERY successful materialization (not just
+        refresh="changed" runs) so the first changed-mode run over a
+        warehouse built normally can already skip."""
+        if mdef.materialized not in ("table", "incremental"):
+            return
+        stamps = self._file_stamps(os.path.join(self.warehouse_dir, name))
+        self._note_ledger(name, False, stamps)
+        # NEVER record build state for an --empty run: the fingerprint
+        # covers code+upstream only, not the flag, so a later
+        # refresh="changed" run would false-skip and serve the EMPTY
+        # table as real data (ADVICE r12).  _drop_state already cleared
+        # any prior state, which is exactly right — the next real run
+        # must rebuild.
+        if mdef.bucket_by or self._empty:
+            return
+        fp = self._fingerprint(name, relations)
+        if fp is not None:
+            self._save_state(name, {"fingerprint": fp,
+                                    "schema": df.schema.jsonValue(),
+                                    "files": stamps})
 
     @staticmethod
     def _enforce_contract(name: str, df: DataFrame,
@@ -755,10 +845,7 @@ class Runner:
                 rels[name] = df
                 self._run_hooks(mdef.post_hook, name, rels)
             self.last_refresh_report["built"].append(name)
-            if state_tracked and not self._empty:
-                fp = self._fingerprint(name, relations)
-                if fp is not None:
-                    self._save_state(name, fp)
+            self._record_build(name, mdef, relations, df)
             return df
         if mdef.materialized == "incremental" and wants_ctx:
             from .model import IncrementalContext
@@ -822,19 +909,7 @@ class Runner:
             rels[name] = df
             self._run_hooks(mdef.post_hook, name, rels)
         self.last_refresh_report["built"].append(name)
-        # NEVER record build state for an --empty run: the fingerprint
-        # covers code+upstream only, not the flag, so a later
-        # refresh="changed" run would false-skip and serve the EMPTY
-        # table as real data (ADVICE r12).  _drop_state above already
-        # cleared any prior state, which is exactly right — the next
-        # real run must rebuild.
-        if state_tracked and not self._empty:
-            # record the build state on EVERY successful materialization
-            # (not just refresh="changed" runs) so the first changed-mode
-            # run over a warehouse built normally can already skip
-            fp = self._fingerprint(name, relations)
-            if fp is not None:
-                self._save_state(name, fp)
+        self._record_build(name, mdef, relations, df)
         return df
 
     def _run_parallel(self, sources: dict[str, DataFrame],

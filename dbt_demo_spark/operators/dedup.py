@@ -340,7 +340,13 @@ def minhash_near_dups(docs: DataFrame | None, threshold: float = 0.5,
 
     With the default portable hash the pipeline runs on the Arrow-vectorized
     feature pass (operators/shingle_arrow.py — integer-identical, ~3x
-    faster); custom hashes keep the pure-JVM expression path."""
+    faster); custom hashes keep the pure-JVM expression path.
+
+    Recall is the banding's, not exact: a pair becomes a candidate only if
+    all ROWS_PER_BAND minhashes of at least one of the BANDS bands agree,
+    so a pair at shingle Jaccard J is missed with probability
+    (1 - J**ROWS_PER_BAND)**BANDS — with 4 x 4, 1.4% at J = 0.90 and 9% at
+    J = 0.82.  The verify is exact, so precision is."""
     if features is not None:
         if token_hash is not token_hashes:
             raise ValueError("features= carries portable-hash features; "
@@ -562,7 +568,11 @@ def incremental_minhash_dedup(new_docs: DataFrame, index_dir: str,
          whose empty shingle sets can never self-verify;
       3. exact Jaccard verify (cross pairs with d1 != d2 plus within-batch
          pairs) over the union of batch + index shingle sets, semi-filtered
-         to candidate docs;
+         to candidate docs.  Only LSH candidates are verified, so near-dup
+         recall is the banding's (as in ``minhash_near_dups``): a pair at
+         shingle Jaccard J is missed with probability
+         (1 - J**ROWS_PER_BAND)**BANDS — 1.4% at J = 0.90 and 9% at
+         J = 0.82 with 4 bands x 4 rows — and its later doc is kept;
       4. drop a new doc iff it matches ANY doc ingested before it (lower id
          in-batch, or anything already indexed).  Arrival-order semantics:
          the indexed doc always wins, whatever its id — so multi-batch

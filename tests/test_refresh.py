@@ -447,3 +447,149 @@ def test_full_refresh_empty_and_full_builds_never_reuse(spark, tmp_path):
     r = Runner(spark, _tested_registry(tmp_path), wh)
     res = r.build(_tested_sources(spark, tmp_path), refresh="changed")
     assert res.ok and all(_reused(res).values())
+
+
+# --------------------------------------------------------------------------
+# recorded build state: a skipped table is served with the schema its
+# build read back, and only while its own files are the ones the build
+# left behind
+# --------------------------------------------------------------------------
+
+def _job_ids(spark) -> set[int]:
+    """Spark job ids the status tracker knows, once the listener bus has
+    delivered every event posted so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+def test_noop_changed_build_launches_zero_spark_jobs_and_ledgers_reuse(
+        spark, tmp_path):
+    import json
+
+    wh = _tested_project(spark, tmp_path)
+    with open(os.path.join(wh, "run_results.json")) as f:
+        first = json.load(f)["nodes"]
+    tables = {"fct_orders", "dim_customers"}
+    for name, node in first.items():
+        if name in tables:
+            assert not node["reused"] and node["files"] >= 1, name
+            assert node["bytes"] == sum(
+                os.path.getsize(os.path.join(wh, name, f))
+                for f in os.listdir(os.path.join(wh, name))
+                if f.startswith("part-")), name
+        else:
+            assert (node["reused"], node["files"], node["bytes"]) == (
+                False, None, None), name
+
+    r = Runner(spark, _tested_registry(tmp_path), wh)
+    sources = _tested_sources(spark, tmp_path)
+    before = _job_ids(spark)
+    res = r.build(sources, refresh="changed")
+    assert _job_ids(spark) - before == set()
+    assert res.ok and set(r.last_refresh_report["skipped"]) == tables
+    with open(os.path.join(wh, "run_results.json")) as f:
+        again = json.load(f)["nodes"]
+    for name in tables:
+        assert again[name]["reused"] and res.nodes[name].reused
+        assert (again[name]["files"], again[name]["bytes"]) == (
+            first[name]["files"], first[name]["bytes"])
+    assert res.relations["fct_orders"].count() == 12
+
+
+def test_table_changed_outside_the_runner_rebuilds(spark, tmp_path):
+    import json
+
+    src_a, src_b = str(tmp_path / "src_a"), str(tmp_path / "src_b")
+    _write_src(spark, src_a, [1, 2])
+    _write_src(spark, src_b, [1, 2, 3])
+    wh = str(tmp_path / "wh")
+
+    def refresh():
+        r = Runner(spark, _registry(), wh)
+        rel = r.run({"src_a": spark.read.parquet(src_a),
+                     "src_b": spark.read.parquet(src_b)}, refresh="changed")
+        return r.last_refresh_report, rel
+
+    _, rel = refresh()
+    want_a = sorted(rel["mart_a"].collect())
+    want_b = sorted(rel["mart_b"].collect())
+
+    # a deleted part file: the table rebuilds and serves every row again
+    part = sorted(f for f in os.listdir(os.path.join(wh, "mart_a"))
+                  if f.startswith("part-"))[0]
+    os.remove(os.path.join(wh, "mart_a", part))
+    rep, rel = refresh()
+    assert (rep["built"], rep["skipped"]) == (["stg_a", "mart_a"], ["mart_b"])
+    assert sorted(rel["mart_a"].collect()) == want_a
+
+    # a directory rewritten outside the runner: rebuilt, not served
+    spark.createDataFrame([(9, 9)], "day int, n long").write \
+        .mode("overwrite").parquet(os.path.join(wh, "mart_b"))
+    rep, rel = refresh()
+    assert (rep["built"], rep["skipped"]) == (["stg_a", "mart_b"], ["mart_a"])
+    assert sorted(rel["mart_b"].collect()) == want_b
+
+    # a legacy entry (a bare fingerprint) rebuilds once, then skips
+    state_path = os.path.join(wh, "_build_state.json")
+    with open(state_path) as f:
+        state = json.load(f)
+    with open(state_path, "w") as f:
+        json.dump({k: v["fingerprint"] if k in ("mart_a", "mart_b") else v
+                   for k, v in state.items()}, f)
+    rep, _ = refresh()
+    assert rep["skipped"] == []
+    rep, rel = refresh()
+    assert sorted(rep["skipped"]) == ["mart_a", "mart_b"]
+    assert sorted(rel["mart_a"].collect()) == want_a
+
+
+def test_partitioned_and_widened_incremental_skip_with_read_back_schema(
+        spark, tmp_path):
+    src = str(tmp_path / "src")
+    (spark.createDataFrame([(k, k % 2, f"0{k % 3}") for k in range(8)],
+                           "k long, p int, tag string")
+     .coalesce(1).write.parquet(src))
+    wh = str(tmp_path / "wh")
+
+    def registry(widened: bool):
+        reg = ModelRegistry()
+
+        @reg.model("part", deps=("src",), materialized="table",
+                   partition_by=("tag", "p"))
+        def part(refs):
+            return refs["src"].select("tag", "k", "p")
+
+        if widened:
+            @reg.model("inc", deps=("src",), materialized="incremental",
+                       partition_by=("p",),
+                       on_schema_change="append_new_columns")
+            def inc(refs):
+                return refs["src"].filter("p = 1").select(
+                    "k", (F.col("k") * 10).alias("extra"), "p")
+        else:
+            @reg.model("inc", deps=("src",), materialized="incremental",
+                       partition_by=("p",),
+                       on_schema_change="append_new_columns")
+            def inc(refs):
+                return refs["src"].filter("p = 0").select("k", "p")
+        return reg
+
+    def refresh(widened: bool):
+        r = Runner(spark, registry(widened), wh)
+        rel = r.run({"src": spark.read.parquet(src)}, refresh="changed")
+        return r.last_refresh_report, rel
+
+    refresh(False)
+    rep, built = refresh(True)
+    assert rep["built"] == ["inc"] and rep["skipped"] == ["part"]
+    rep, served = refresh(True)
+    assert sorted(rep["skipped"]) == ["inc", "part"]
+    inc_path = os.path.join(wh, "inc")
+    merged = spark.read.option("mergeSchema", "true").parquet(inc_path)
+    assert served["inc"].schema == built["inc"].schema == merged.schema
+    assert merged.columns == ["k", "extra", "p"]
+    assert sorted(served["inc"].collect()) == sorted(merged.collect())
+    plain = spark.read.parquet(os.path.join(wh, "part"))
+    assert served["part"].schema == plain.schema
+    assert plain.columns == ["k", "tag", "p"]
+    assert sorted(served["part"].collect()) == sorted(plain.collect())
