@@ -27,6 +27,12 @@ the incremental mode the reference's table-rebuild policy scales into:
     bucketed on the same keys with the same count join with ZERO
     exchanges — the fact-to-fact shuffle paid once per build instead of
     once per query, the classic co-located-join layout for 100 TB marts.
+    Each bucket is written as ONE file, so the scan can claim the sortBy
+    order and a sort-merge join skips its per-query Sorts.  With
+    ``partition_by`` too, a bucket is one file PER PARTITION DIRECTORY:
+    the join stays exchange-free, but the order holds only when partition
+    pruning leaves a single directory — an unpruned read keeps the Sort
+    (pinned in tests/test_bucketing.py).
   * ``ephemeral`` -> dbt's compile-time-inline materialization [public
     knowledge: dbt ephemeral models are interpolated into consumers as
     CTEs, never created in the warehouse].  Here the model's DataFrame is
@@ -1001,6 +1007,9 @@ class Runner:
             # The extra exchange is a BUILD-time cost, paid once per
             # layout; serve plans drop 2 Sort nodes (measured sf1:
             # mart_bucketed_revenue 0.53 -> 0.30 s interleaved min).
+            # With partition_by each task writes one file per partition
+            # directory it holds, so the Sort-free serve needs a read
+            # pruned to one partition (module docstring).
             df_bk = df.repartition(n_buckets, *[F.col(c) for c in bucket_by])
             w = df_bk.write.mode("overwrite")
             if partition_by:

@@ -31,9 +31,6 @@ from dataclasses import dataclass
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
-META_COLS = ("dbt_scd_id", "dbt_updated_at", "dbt_valid_from",
-             "dbt_valid_to", "dbt_is_current")
-
 
 @dataclass(frozen=True)
 class SnapshotDef:

@@ -1,9 +1,10 @@
 """Persisted BM25 corpus-statistics index (r13, VERDICT r12 item 6).
 
 The catalog row ``corpus_bm25_topk`` (queries/text_filters.py, X98
-[public knowledge: Robertson & Zaragoza 2009]) recomputes the corpus
-statistics — N, total token length, per-term document frequencies — on
-every execution.  That is fine for a one-shot batch query, but a
+[public knowledge: Robertson & Zaragoza 2009]) used to recompute the
+corpus statistics — N, total token length, per-term document
+frequencies — on every execution.  That is fine for a one-shot batch
+query, but a
 retrieval-scoring service queries the SAME corpus many times: the stats
 deserve the train-once / serve-many lifecycle the IVF/PQ/LSH family and
 the incremental dedup indexes already have (operators/ivf.py,
@@ -32,13 +33,12 @@ Index layout (all plain parquet under one directory):
   * serve: the scoring query reads ONLY its |query|-many term rows from
     term_df (predicate pushdown on the term column) plus the 1-row
     scalars — a metadata-weight read.  The per-document tf/dl work is
-    row-local exactly as in the inline row; only the stats pass is
-    replaced.
+    row-local; only the stats pass is replaced.
 
 Exactness: df/N/sum_dl are integer partials under union — a two-batch
 ingest reproduces the one-shot build bit-for-bit (pinned in
-tests/test_bm25_index.py), so the served scores equal the inline
-query's scores on the same corpus.
+tests/test_bm25_index.py), so the served scores equal the DuckDB
+oracle's inline-stats scores on the same corpus.
 """
 
 from __future__ import annotations
@@ -191,8 +191,8 @@ def bm25_topk_served(spark: SparkSession, docs: DataFrame,
     the frozen IVF/PQ serving paths), embedded as plan literals so the
     scoring job is a single corpus scan with zero extra passes.  A term
     absent from the index has df=0 (its contribution uses the standard
-    +0.5 smoothing, identical to the inline row's treatment of a term
-    no document contains)."""
+    +0.5 smoothing, identical to the DuckDB oracle's treatment of a
+    term no document contains)."""
     n_docs, sum_dl = spark.read.parquet(index.scalars_path).first()
     df_rows = (spark.read.parquet(index.term_df_path)
                .filter(F.col("term").isin(*terms)).collect())
@@ -204,11 +204,10 @@ def bm25_topk_served(spark: SparkSession, docs: DataFrame,
     def _tf(term: str):
         return F.size(F.filter(toks, lambda x: x == F.lit(term)))
 
-    # Expression structure mirrors the inline catalog row EXACTLY, with
-    # the corpus stats substituted as literals: same JVM ops in the same
-    # order (F.log, the same divide chain), so served scores are
-    # bit-identical to inline scores — a Python-side math.log would
-    # risk a last-ulp divergence against the JVM's Math.log.
+    # The corpus stats are substituted as literals, but the score stays
+    # a JVM expression in the oracle's order (F.log, then the same
+    # divide chain) — a Python-side math.log would risk a last-ulp
+    # divergence against the JVM's Math.log.
     contribs = None
     for t in terms:
         tf = _tf(t)

@@ -28,7 +28,7 @@ DuckDB oracle (tests/test_decontaminate.py) plus planted fixtures.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 
 from ..functions.numeric import round2, sql_round2
 from ..functions.text import (shingle_hashes, sql_shingle_hashes,
@@ -44,16 +44,6 @@ def _doc_grams(docs: DataFrame, text_col: str, id_col: str) -> DataFrame:
     grams = F.when(F.size(th) >= 3, shingle_hashes(th)) \
              .otherwise(F.array().cast("array<long>"))
     return docs.select(F.col(id_col).alias("doc_id"), grams.alias("grams"))
-
-
-def eval_gram_set(eval_docs: DataFrame, text_col: str = "text",
-                  id_col: str = "doc_id") -> DataFrame:
-    """Distinct n-gram hashes of the eval set: one column ``gram``.  The
-    distinct is a shuffle of the EVAL side only — bounded by the benchmark
-    size, never the corpus."""
-    return (_doc_grams(eval_docs, text_col, id_col)
-            .select(F.explode("grams").alias("gram"))
-            .distinct())
 
 
 def contamination_report(corpus: DataFrame, eval_docs: DataFrame,
@@ -89,7 +79,7 @@ def contamination_report(corpus: DataFrame, eval_docs: DataFrame,
     # and the distinct cost a whole shuffle stage (partial agg + Exchange
     # + final agg) on the eval subtree, ~0.1 s of the sf0.1 wall for a
     # benchmark-sized side where the dedup saves almost no broadcast
-    # bytes.  ``eval_gram_set`` stays as the public distinct form.
+    # bytes.
     ev_grams = (_doc_grams(eval_docs, text_col, id_col)
                 .select(F.explode("grams").alias("gram")))
     matched = exploded.join(F.broadcast(ev_grams), "gram", "left_semi")

@@ -43,16 +43,6 @@ _B = [1, 7, 31, 127, 8191, 131071, 524287, 2147483647,
       3, 11, 37, 131, 8209, 131101, 524309, 2147483659]
 
 
-def exact_dedup_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Corpus-level exact-duplicate stats: total docs, distinct texts,
-    duplicate rows.  One pass, partial-aggregated."""
-    return docs.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct(F.col(text_col)).alias("n_distinct"),
-        (F.count(F.lit(1)) - F.countDistinct(F.col(text_col))).alias("n_dupes"),
-    )
-
-
 def exact_dedup_keep_first(docs: DataFrame, text_col: str = "text",
                            id_col: str = "doc_id") -> DataFrame:
     """Exact dedup keeping the lowest id per distinct text.  The groupBy is
@@ -87,45 +77,6 @@ def doc_shingles(docs: DataFrame, text_col: str = "text",
     )
 
 
-def minhash_signature(shingled: DataFrame) -> DataFrame:
-    """(doc_id, m0..m{K-1}): minhash over the shingle-hash array — pure
-    per-row array math, no shuffle.
-
-    Single fold: the accumulator is the K-vector of running minima, so the
-    shingle array is referenced exactly once.  The previous form (K separate
-    ``array_min(transform(sh, ...))`` columns) re-inlined the whole
-    token→shingle pipeline K times per row — the same quadratic-inlining
-    class fixed for shingles in functions/text.py (commit 68cac82)."""
-    ab = F.array(*[
-        F.struct(F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b"))
-        for a, b in zip(_A[:K_MINHASH], _B[:K_MINHASH])
-    ])
-    # sentinel > any value mod HASH_P; shingled rows always have >= 1 shingle
-    init = F.array(*[F.lit(HASH_P + 1).cast("long")] * K_MINHASH)
-    sig = F.aggregate(
-        F.col("sh"), init,
-        lambda acc, s: F.zip_with(
-            acc, ab, lambda m, p: F.least(m, (s * p["a"] + p["b"]) % HASH_P)))
-    sigd = shingled.select("doc_id", sig.alias("sig"))
-    return sigd.select(
-        "doc_id", *[F.col("sig")[i].alias(f"m{i}") for i in range(K_MINHASH)])
-
-
-def band_keys(signatures: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_key): one row per band.  band_key packs the
-    band's minhash rows; equal keys -> LSH candidate bucket."""
-    bands = []
-    for b in range(BANDS):
-        key = F.lit(0).cast("long")
-        for r in range(ROWS_PER_BAND):
-            key = key * 31 + F.col(f"m{b * ROWS_PER_BAND + r}")
-        bands.append(F.struct(F.lit(b).alias("band_id"), key.alias("band_key")))
-    return (
-        signatures.select("doc_id", F.explode(F.array(*bands)).alias("band"))
-        .select("doc_id", "band.band_id", "band.band_key")
-    )
-
-
 def band_key_array(sh: Column) -> Column:
     """array<long> of BANDS band keys, computed from the shingle-hash array
     in ONE expression that references `sh` exactly once.
@@ -133,8 +84,9 @@ def band_key_array(sh: Column) -> Column:
     The fold's merge step accumulates the K running minhash minima; the
     `finish` lambda turns the accumulator into per-band Horner keys — inside
     `finish` the accumulator is a bound lambda variable, so referencing it
-    per band cannot re-inline the upstream pipeline.  This is the fusion of
-    minhash_signature + band_keys without their K-fold expression blow-up."""
+    per band cannot re-inline the upstream pipeline.  K separate
+    ``array_min(transform(sh, ...))`` columns would re-inline the whole
+    token->shingle pipeline K times per row."""
     ab = F.array(*[
         F.struct(F.lit(a).cast("long").alias("a"), F.lit(b).cast("long").alias("b"))
         for a, b in zip(_A[:K_MINHASH], _B[:K_MINHASH])
@@ -152,9 +104,10 @@ def band_key_array(sh: Column) -> Column:
 
 
 def band_rows(shingled: DataFrame) -> DataFrame:
-    """(doc_id, band_id, band_key) rows via the fused single-expression band
-    key path — same output as band_keys(minhash_signature(...)) with the
-    token→shingle pipeline evaluated once per row."""
+    """(doc_id, band_id, band_key): one row per band, via the fused
+    single-expression band key path (the token→shingle pipeline is
+    evaluated once per row).  band_key packs the band's ROWS_PER_BAND
+    minhash rows; equal keys -> LSH candidate bucket."""
     return (
         shingled.select("doc_id", band_key_array(F.col("sh")).alias("bks"))
         .select("doc_id", F.posexplode("bks").alias("band_id", "band_key"))

@@ -25,7 +25,7 @@ Determinism architecture (operators/lm.py / quality.py verbatim):
     under the bag model = sum over its feature sequence of the
     log-ratio lookups, divided by the feature count (length-normalized,
     so long documents are not favored) — a left fold, BIT-IDENTICAL
-    across the JVM fold, the Arrow twin, and the DuckDB oracle.
+    between the JVM fold and the DuckDB oracle.
   * SELECT: ``logweight_threshold_for_keep_fraction`` — one mergeable
     approx_percentile (exact for small sets) over the weights; keep
     docs at or above the cut.
@@ -95,8 +95,8 @@ def dsir_logweight(text: Column, table: list[float]) -> Column:
     """Length-normalized log importance weight of the text (higher =
     more target-like): one token-hash pass, bigram feature ids,
     element_at lookups into the flat log-ratio literal, left-to-right
-    sum, one divide — the association order the DuckDB and Arrow twins
-    replicate bit-for-bit.  NULL for texts with < 2 tokens (no bigram
+    sum, one divide — the association order the DuckDB twin replicates
+    bit-for-bit.  NULL for texts with < 2 tokens (no bigram
     feature to score)."""
     import numpy as np
 
@@ -152,41 +152,6 @@ def sql_dsir_logweight_query(table: list[float],
            END AS dsir_logweight
     FROM s CROSS JOIN dw
 """
-
-
-def dsir_logweight_arrow(docs: DataFrame, table: list[float],
-                         text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched twin for the hot path: hash + table gather with the
-    per-document sum accumulated LEFT-TO-RIGHT (a Python loop, not
-    numpy's pairwise reduction) so weights are bit-identical to the JVM
-    fold (pytest-asserted)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    lut = np.array(table, dtype=np.float64)
-    dim = len(table)
-
-    def score_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for t in pdf[text_col]:
-                feats = _feature_ids_py(t, dim) if t is not None else []
-                if not feats:
-                    out.append(None)
-                    continue
-                acc = 0.0
-                for f in feats:   # left fold — matches the JVM aggregate
-                    acc += float(lut[f])
-                out.append(acc / float(len(feats)))
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "dsir_logweight": out})
-
-    return (docs.select(id_col, text_col)
-            .mapInPandas(score_batch,
-                         f"{id_col} long, dsir_logweight double"))
 
 
 def logweight_threshold_for_keep_fraction(docs: DataFrame,

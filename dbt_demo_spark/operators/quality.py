@@ -23,8 +23,8 @@ Determinism architecture (the operators/lm.py discipline verbatim):
     MONOTONE in the logistic probability, so band filtering on it is
     identical to filtering on sigmoid(margin) — and skipping the
     sigmoid keeps the score transcendental-free: pure lookup + add +
-    one divide, BIT-IDENTICAL across the JVM fold, the Arrow twin, and
-    the DuckDB oracle.
+    one divide, BIT-IDENTICAL between the JVM fold and the DuckDB
+    oracle.
   * feat(tok) = char_hash(tok) % dim — the repo's portable token hash
     (functions/text.py: integer arithmetic over ascii/length/substr,
     identical in Spark SQL, DuckDB, and the Python trainer).  The
@@ -38,8 +38,6 @@ tail before anything shuffles.
 """
 
 from __future__ import annotations
-
-import math
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
@@ -138,7 +136,7 @@ def train_quality_classifier(pos_docs: DataFrame, neg_docs: DataFrame,
 
 
 # ------------------------------------------------------------------ #
-# scoring — JVM spec path, Arrow twin, DuckDB twin                   #
+# scoring — JVM spec path, DuckDB twin                               #
 # ------------------------------------------------------------------ #
 
 def quality_margin(text: Column, weights: list[float],
@@ -146,7 +144,7 @@ def quality_margin(text: Column, weights: list[float],
     """Classifier margin of the text (higher = more in-domain): one
     token pass, element_at lookups into the flat weight literal,
     left-to-right sum, one divide — the association order the DuckDB
-    and Arrow twins replicate bit-for-bit.  NULL for NULL/empty text
+    twin replicates bit-for-bit.  NULL for NULL/empty text
     (no tokens to score)."""
     import numpy as np
 
@@ -204,49 +202,6 @@ def sql_quality_margin_query(weights: list[float], bias: float,
            END AS quality_margin
     FROM s CROSS JOIN qw
 """
-
-
-def quality_margin_arrow(docs: DataFrame, weights: list[float],
-                         bias: float, text_col: str = "text",
-                         id_col: str = "doc_id") -> DataFrame:
-    """Arrow-batched twin for the hot path: per-token hash + table
-    gather with the per-document sum accumulated LEFT-TO-RIGHT (a Python
-    loop, not numpy's pairwise reduction) so margins are bit-identical
-    to the JVM fold (pytest-asserted)."""
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
-    lut = np.array(weights, dtype=np.float64)
-    dim = len(weights)
-    b = float(bias)
-
-    def score_batch(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = []
-            for t in pdf[text_col]:
-                if t is None or len(t) == 0:
-                    out.append(None)
-                    continue
-                feats = _features_py(t, dim)
-                acc = 0.0
-                for f_ in feats:   # left fold — matches the JVM aggregate
-                    acc += float(lut[f_])
-                out.append(b + acc / float(len(feats)))
-            yield pd.DataFrame({id_col: pdf[id_col],
-                                "quality_margin": out})
-
-    return (docs.select(id_col, text_col)
-            .mapInPandas(score_batch,
-                         f"{id_col} long, quality_margin double"))
-
-
-def sigmoid(margin: float) -> float:
-    """Convenience: margin -> probability, for callers who want the
-    calibrated score (NOT used in any engine path — the band filter is
-    monotone in the margin, so the engines never pay a transcendental)."""
-    return 1.0 / (1.0 + math.exp(-margin))
 
 
 def margin_threshold_for_keep_fraction(docs: DataFrame,

@@ -427,123 +427,3 @@ def lsh_topk_indexed(queries: DataFrame, index: DataFrame, k: int = 5,
         "query_id", "qv", "qn",
         F.explode(probe_buckets(F.col("bucket0"))).alias("bucket"))
     return _ranked_topk(_score(qprobes.join(index, "bucket")), k)
-
-
-# ------------------------------------------------------------------ #
-# Cost-based serving dispatch (r14, VERDICT r13 item 4)              #
-# ------------------------------------------------------------------ #
-
-# Throughput constants RECEIPTED from SESSION_LSH_RECEIPT.json (sf1,
-# min-of-7 interleaved, 2 000 queries x 100 000 corpus vectors):
-#
-#   * brute_control 0.578s for 2e8 Arrow-scored pairs -> ~3.5e8 pairs/s
-#     (brute_force_topk_arrow's vectorized matmul);
-#   * lsh 0.656s, of which the two Arrow bucketize passes dominate
-#     (~0.62s over ~102k rows, r11 stage breakdown) -> ~1.6e5 rows/s;
-#   * candidate scoring runs the JVM interpreted dot fold -> ~1e6
-#     pairs/s, conservative.
-#
-# The receipt's honest finding — at 100k vectors the INLINE probe LOSES
-# to brute force (0.656 vs 0.578) — is exactly what this model
-# reproduces: inline LSH pays the corpus bucketize on every call, so it
-# only wins once |Q|x|C| pair work outgrows the linear bucketize terms
-# (~|Q| > 2 200 at 17 probes / 2^16 buckets).  A PERSISTED index
-# (build_lsh_index) moves the corpus pass to build time and flips the
-# crossover down to tiny query sets — which is why the dispatcher
-# always prefers a supplied index unless the corpus is small enough for
-# brute to win outright.
-BRUTE_PAIRS_PER_SEC = 3.5e8
-BUCKETIZE_ROWS_PER_SEC = 1.6e5
-CANDIDATE_PAIRS_PER_SEC = 1.0e6
-
-
-def estimate_ann_costs(n_queries: int, n_corpus: int,
-                       indexed: bool = False,
-                       n_buckets: int | None = None,
-                       n_probes: int = N_PLANES + 1,
-                       ivf_clusters: int | None = None,
-                       ivf_nprobe: int = 2) -> dict:
-    """Estimated seconds per serving path from corpus statistics — the
-    row count x candidate-rate model the dispatcher decides on.
-    ``n_buckets`` defaults to the full 2^N_PLANES code space (expected
-    bucket size n_corpus / 2^N_PLANES counts empties — the uniform
-    assumption the synthetic-embedding receipt validates); pass the
-    index's measured distinct-bucket count for a skewed real corpus.
-    An ``ivf`` entry appears when ``ivf_clusters`` is given (a persisted
-    IVF index is on offer): assignment scores n_queries x clusters
-    centroid pairs and candidates are n_q x nprobe x (n_c / clusters),
-    both through the JVM interpreted dot fold — ANN_DISPATCH_RECEIPT
-    .json confirms the consequence: at 16 clusters / nprobe 2 the IVF
-    candidate set is ~n_c/8 per query vs ~17 x n_c / 2^16 for LSH, so
-    cost-wise indexed LSH dominates IVF at the default geometry
-    (measured 0.53s vs 2.27s at 400 x 20k) — IVF's case is recall on
-    CLUSTERED data, which a cost dispatcher cannot see; callers who
-    want IVF's recall pass only the IVF index."""
-    buckets = float(n_buckets if n_buckets else 2 ** N_PLANES)
-    candidates = n_queries * n_probes * (n_corpus / buckets)
-    brute = (n_queries * n_corpus) / BRUTE_PAIRS_PER_SEC
-    bucketize_rows = n_queries if indexed else n_queries + n_corpus
-    lsh = (bucketize_rows / BUCKETIZE_ROWS_PER_SEC
-           + candidates / CANDIDATE_PAIRS_PER_SEC)
-    out = {"brute": brute, "lsh": lsh}
-    if ivf_clusters:
-        ivf_pairs = (n_queries * ivf_clusters
-                     + n_queries * ivf_nprobe * (n_corpus / ivf_clusters))
-        out["ivf"] = ivf_pairs / CANDIDATE_PAIRS_PER_SEC
-    return out
-
-
-def choose_ann_path(n_queries: int, n_corpus: int,
-                    indexed: bool = False,
-                    n_buckets: int | None = None,
-                    ivf_clusters: int | None = None,
-                    ivf_nprobe: int = 2) -> str:
-    """'brute' | 'lsh' | 'ivf' — whichever the receipted cost model
-    prices cheapest among the paths on offer.  Ties go to brute: it is
-    exact, and at the tie the approximate path has no recall argument
-    to offer."""
-    c = estimate_ann_costs(n_queries, n_corpus, indexed, n_buckets,
-                           ivf_clusters=ivf_clusters,
-                           ivf_nprobe=ivf_nprobe)
-    best = min(c, key=lambda k_: (c[k_], k_ != "brute"))
-    return "brute" if c[best] >= c["brute"] else best
-
-
-def sim_topk_dispatch(queries: DataFrame, corpus: DataFrame, k: int = 5,
-                      id_col: str = "vec_id", vec_col: str = "embedding",
-                      index: DataFrame | None = None,
-                      ivf_index=None,
-                      n_queries: int | None = None,
-                      n_corpus: int | None = None
-                      ) -> tuple[DataFrame, str]:
-    """Cost-dispatched top-k: pick brute force vs (indexed) LSH vs IVF
-    from corpus statistics instead of making the caller guess — the
-    engine answer to SESSION_LSH_RECEIPT's finding that the probe path
-    loses below the crossover.  Returns ``(result, chosen)`` so callers
-    and tests can assert which plan actually ran.  Counts are taken
-    from the supplied frames when not passed (a parquet-metadata count,
-    no data scan); ``index`` is a ``build_lsh_index`` handle and
-    ``ivf_index`` an ``ivf.build_index`` / ``ivf.load_index`` handle —
-    each a pre-paid corpus pass that moves its path's crossover down;
-    a small-corpus call still dispatches to brute (exact beats
-    approximate when it is also cheaper).  Measured walls for all
-    three serving paths at one operating point: ANN_DISPATCH_RECEIPT
-    .json."""
-    nq = n_queries if n_queries is not None else queries.count()
-    nc = n_corpus if n_corpus is not None else (
-        index.count() if index is not None else corpus.count())
-    chosen = choose_ann_path(
-        nq, nc, indexed=index is not None,
-        ivf_clusters=(len(ivf_index.centroids)
-                      if ivf_index is not None else None))
-    if chosen == "ivf":
-        from . import ivf as _ivf
-        return (_ivf.ivf_topk_indexed(queries, ivf_index, k,
-                                      id_col=id_col, vec_col=vec_col),
-                "ivf")
-    if chosen == "brute":
-        return (brute_force_topk_arrow(queries, corpus, k,
-                                       id_col, vec_col), "brute")
-    if index is not None:
-        return lsh_topk_indexed(queries, index, k, id_col, vec_col), "lsh"
-    return lsh_topk(queries, corpus, k, id_col, vec_col), "lsh"

@@ -20,15 +20,15 @@ import hashlib
 import os
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.numeric import round2, scaled_long, sql_round2, sql_scaled_long
 from ..functions.text import (HASH_P, position_weighted_fingerprint,
                               sql_position_weighted_fingerprint,
                               sql_stopword_count, sql_token_hashes,
                               sql_tokens, stopword_count, token_hashes, tokens)
-from ..functions.vectors import (as_double, cosine, lsh_bucket, sql_cosine,
-                                 sql_lsh_bucket, sql_norm, sql_probe_join)
+from ..functions.vectors import (sql_cosine, sql_lsh_bucket, sql_norm,
+                                 sql_probe_join)
 from ..operators import dedup, similarity
 from ..sources.events import load_events
 from ..sources.parquet import (artifact_dir, build_once, load_table,
@@ -45,8 +45,7 @@ from .catalog import query
 # fell outside the checked window (VERDICT r2 item 1).  Three redundant
 # registrations were retired to bring the catalog to exactly 50:
 #   * dedup_exact_stats — subsumed by dedup_exact_keep_first (same one-shuffle
-#     exact-dedup operator; stats are an aggregate of its output); the
-#     operator stays pytest-covered via operators/dedup.exact_dedup_stats.
+#     exact-dedup operator; stats are an aggregate of its output).
 #   * dedup_minhash_lsh (unguarded) — the guarded variant IS the production
 #     operator; the unguarded path stays pytest-covered
 #     (tests/test_operators.py lsh guard tests).
@@ -92,7 +91,7 @@ _MINHASH_MS = ", ".join(
 )
 def _horner_band_key(b: int) -> str:
     # Explicit-parenthesis Horner form ((m0*31 + m1)*31 + m2)*31 + m3 — must
-    # match operators/dedup.py band_keys exactly, NOT a flat precedence-broken
+    # match operators/dedup.py band_key_array exactly, NOT a flat precedence-broken
     # sum, or oracle and Spark bucket different candidate sets.
     key = f"CAST(m{b * dedup.ROWS_PER_BAND} AS BIGINT)"
     for r in range(1, dedup.ROWS_PER_BAND):
@@ -392,8 +391,9 @@ def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sim_topk_lsh_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw-scan twin of sim_topk_lsh (the pre-r14 catalog plan): corpus
-    bucketized inline on every execution.  Kept for the equivalence
-    pytest and receipts."""
+    bucketized inline on every execution.  Kept as the only reference
+    for the indexed serve on the private corpora in
+    tests/test_semdedup.py, where no DuckDB oracle runs."""
     emb = load_table(spark, sf_dir, "embeddings")
     out = similarity.lsh_topk(emb.filter(F.col("vec_id") % 50 == 0), emb, k=5)
     return out.withColumn("rank", F.col("rank").cast("int"))
@@ -838,8 +838,9 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_embedding_cosine_inline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw-scan twin of dedup_embedding_cosine (the pre-r15 catalog plan):
-    corpus bucketized + verified inline on every execution.  Kept for the
-    equivalence pytest and receipts."""
+    corpus bucketized + verified inline on every execution.  Kept as the
+    only reference for the indexed serve on the private corpora in
+    tests/test_semdedup.py, where no DuckDB oracle runs."""
     emb = load_table(spark, sf_dir, "embeddings")
     return similarity.embedding_near_dups(emb, threshold=_EMB_DUP_THRESHOLD)
 
@@ -943,9 +944,9 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide explode outright).  The majority vote with the
     deterministic tie-break is an array_min over (neg-count, lang)
     structs — max matches, then lexicographically-smallest candidate,
-    exactly the window's ORDER BY.  The exploded twin is kept below for
-    the receipt and the equivalence pytest; the DuckDB oracle (explode +
-    join + window) is unchanged — plan shape must never change answers.
+    exactly the window's ORDER BY.  The DuckDB oracle keeps the exploded
+    shape (explode + join + window) — plan shape must never change
+    answers.
     (The synthetic corpus shares one vocabulary across langs, so
     accuracy is chance — the operator mechanics are what's under
     test.)"""
@@ -974,35 +975,6 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
          .otherwise(F.lit("unknown")).alias("predicted_lang"),
         F.when(best["matches"] > 0, best["matches"])
          .otherwise(F.lit(0).cast("long")).alias("marker_matches"),
-    )
-
-
-def text_lang_id_exploded(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pre-r12 plan (explode + broadcast lexicon join + shuffle +
-    window) — kept for LANGID_RECEIPT.json and the equivalence
-    pytest."""
-    spark_markers = F.array(*[
-        F.struct(F.lit(lang).alias("lang"), F.lit(tok).alias("tok"))
-        for lang, tok in _LANG_MARKERS])
-    docs = spread(load_table(spark, sf_dir, "documents")
-                  .select("doc_id", "text", "lang"), "doc_id")
-    markers = (spark.range(1).select(F.explode(spark_markers).alias("m"))
-               .select("m.lang", "m.tok"))
-    toks = docs.select("doc_id", F.explode(tokens(F.col("text"))).alias("tok"))
-    scores = (toks.join(F.broadcast(markers), "tok")
-              .groupBy("doc_id", F.col("lang").alias("cand"))
-              .agg(F.count(F.lit(1)).alias("matches")))
-    w = Window.partitionBy("doc_id").orderBy(F.desc("matches"), F.asc("cand"))
-    best = (scores.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1).select("doc_id", "cand", "matches"))
-    return (
-        docs.alias("d").join(best.alias("r"), "doc_id", "left")
-        .select(
-            "doc_id",
-            F.col("d.lang").alias("actual_lang"),
-            F.coalesce(F.col("r.cand"), F.lit("unknown")).alias("predicted_lang"),
-            F.coalesce(F.col("r.matches"), F.lit(0)).alias("marker_matches"),
-        )
     )
 
 
@@ -1196,7 +1168,9 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_value, same as the oracle's COUNT(*)/SUM), and n/value_units
     are associative long partials.  The DuckDB oracle still computes
     from raw events.  events_hourly_rollup_rawscan keeps the fact-scan
-    plan for the receipt and the equivalence pytest."""
+    plan as the reference on the NULL-user fixture
+    (tests/test_bucketing.py) and as the raw-events scan in
+    tests/test_shared_scans.py."""
     g = hourly_user_grain_mart(spark, sf_dir)
     return (
         g.groupBy("hour_start", "event_type")

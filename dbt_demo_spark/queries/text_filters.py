@@ -569,8 +569,8 @@ def corpus_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     score-many lifecycle, same freeze pattern as the LM table).  Scoring
     is pure weight-lookup + left-fold add + one divide (the margin is
     monotone in the logistic probability, so no engine ever evaluates a
-    sigmoid), so the JVM fold, the Arrow twin, and the DuckDB oracle are
-    BIT-IDENTICAL (tests/test_quality.py); the plan is Scan -> Project
+    sigmoid), so the JVM fold and the DuckDB oracle are BIT-IDENTICAL
+    (tests/test_quality.py); the plan is Scan -> Project
     with zero Exchange after the local `spread`.  At 100 TB this is the
     classifier-filter pass that feeds the clean_corpus quality band
     (pipeline.py quality_model / min_quality_margin).
@@ -692,85 +692,26 @@ def bm25_stats_index(spark: SparkSession, sf_dir: str):
 )
 def corpus_bm25_topk(spark: SparkSession, sf_dir: str,
                      k: int = 20) -> DataFrame:
-    """BM25 top-k retrieval served from the PERSISTED stats index
-    (X104, r13): the corpus statistics — N, total length, per-term df —
-    come from the build-once index (|query|-many term rows + one scalar
-    row, embedded as plan literals with the exact inline expression
-    structure, so scores are bit-identical to the inline twin below);
-    the per-query cost is ONE corpus scan of row-local tf/dl work plus
-    TakeOrdered.  The DuckDB oracle still computes stats inline from
-    the raw table — index vs inline can never diverge unnoticed
-    (tests/test_bm25_index.py pins bit-identity; the inline twin keeps
-    its own differential).  At 100 TB: the stats pass amortizes across
-    every retrieval query, and streaming ingest keeps the index current
-    (streaming/ingest.py bm25_stats_maintenance)."""
+    """BM25 top-k document retrieval against a fixed query term set
+    (X98 [public knowledge: Robertson & Zaragoza 2009, the BM25
+    probabilistic relevance function] — the scoring step of
+    retrieval-based data selection), served from the PERSISTED stats
+    index (X104, r13): the corpus statistics — N, total length,
+    per-term df — come from the build-once index (|query|-many term
+    rows + one scalar row, embedded as plan literals); the per-query
+    cost is ONE corpus scan of row-local tf/dl work (one ``F.filter`` +
+    ``size`` per query term, no explode, no shuffle) plus TakeOrdered.
+    The DuckDB oracle still computes the stats inline from the raw
+    table, so index vs raw can never diverge unnoticed
+    (tests/test_bm25_index.py checks the served rows against it).  Both
+    engines round the final score with the exact floor-trick
+    (functions/numeric.round2) and order by the ROUNDED score with a
+    doc_id tiebreak, so the returned k-set is identical even when raw
+    doubles differ in the last ulp.  At 100 TB: the stats pass
+    amortizes across every retrieval query, and streaming ingest keeps
+    the index current (streaming/ingest.py bm25_stats_maintenance)."""
     from ..operators.bm25 import bm25_topk_served
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     return bm25_topk_served(spark, docs, bm25_stats_index(spark, sf_dir),
                             BM25_QUERY_TERMS, k=k, k1=BM25_K1, b=BM25_B)
-
-
-def corpus_bm25_topk_inline(spark: SparkSession, sf_dir: str,
-                            k: int = 20) -> DataFrame:
-    """BM25 top-k document retrieval against a fixed query term set
-    (X98 [public knowledge: Robertson & Zaragoza 2009, the BM25
-    probabilistic relevance function] — the scoring step of
-    retrieval-based data selection: picking the corpus documents most
-    relevant to a target domain/query is a standard curation move for
-    pretraining mixtures).
-
-    Spark-first shape, two tiny jobs over one scan pattern:
-
-      * per-document term frequencies are ROW-LOCAL higher-order
-        functions (``F.filter`` + ``size`` over the token array, one
-        expression per query term — the query is small, so there is NO
-        explode and NO (doc, term) shuffle at all);
-      * corpus statistics (N, total length, per-term document
-        frequencies) reduce to ONE scalar row, broadcast back via a
-        1-row cross join — never a re-scan;
-      * the score is a closed-form expression over (tf_i, dl) and the
-        broadcast stats; top-k is orderBy + limit, which Spark executes
-        as TakeOrdered (per-partition heaps + driver merge of k rows,
-        no full sort at 100 TB).
-
-    Engine parity: both engines round the final score with the exact
-    floor-trick (functions/numeric.round2) and order by the ROUNDED
-    score with a doc_id tiebreak, so the returned k-set is identical
-    even when raw doubles differ in the last ulp (ln/division are the
-    only transcendental steps; inputs to them are exact integers)."""
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = tokens(F.col("text"))
-
-    def _tf(term: str):
-        # closure factory, NOT a default-arg lambda: F.filter treats a
-        # 2-parameter lambda as (element, index) and would bind the
-        # index column over the default
-        return F.size(F.filter(toks, lambda x: x == F.lit(term)))
-
-    tf_cols = [_tf(t).alias(f"tf_{i}")
-               for i, t in enumerate(BM25_QUERY_TERMS)]
-    base = docs.select("doc_id", F.size(toks).alias("dl"), *tf_cols)
-    stats = base.agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("dl").alias("sum_dl"),
-        *[F.sum((F.col(f"tf_{i}") > 0).cast("long")).alias(f"df_{i}")
-          for i in range(len(BM25_QUERY_TERMS))])
-    avgdl = F.col("sum_dl") * 1.0 / F.col("n_docs")
-    contribs = None
-    for i in range(len(BM25_QUERY_TERMS)):
-        tf = F.col(f"tf_{i}")
-        idf = F.log((F.col("n_docs") - F.col(f"df_{i}") + 0.5)
-                    / (F.col(f"df_{i}") + 0.5) + 1.0)
-        c = F.when(tf > 0,
-                   idf * (tf * (BM25_K1 + 1.0))
-                   / (tf + BM25_K1 * (1.0 - BM25_B
-                                      + BM25_B * F.col("dl") / avgdl))
-                   ).otherwise(F.lit(0.0))
-        contribs = c if contribs is None else contribs + c
-    return (
-        base.crossJoin(F.broadcast(stats))
-        .select("doc_id", round2(contribs).alias("bm25"))
-        .orderBy(F.desc("bm25"), F.asc("doc_id"))
-        .limit(k)
-    )

@@ -19,7 +19,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.numeric import round2, scaled_long, sql_round2, sql_scaled_long
-from ..sources.parquet import load_table, spread
+from ..sources.parquet import load_table
 from .catalog import query
 
 
@@ -109,9 +109,7 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts, the orderkey join reads co-located buckets with NO
     exchange, and the group-by keys include the bucket key so the
     aggregate is exchange-free too — the only movement left is the
-    top-10 TakeOrdered.  tpch_q3_rawscan keeps the raw-table twin for
-    the both-numbers receipt (LAYOUT_DECISION.json) and the equivalence
-    pytest."""
+    top-10 TakeOrdered."""
     from .reference_surface import bucketed_order_marts
 
     o, li = bucketed_order_marts(spark, sf_dir)
@@ -128,27 +126,6 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         ob.join(F.broadcast(cust), cust.c_custkey == ob.o_custkey)
         .join(lb.hint("merge"), lb.l_orderkey == ob.o_orderkey)
-        .groupBy(F.col("l_orderkey").alias("order_key"),
-                 F.col("o_orderdate").cast("date").alias("order_date"),
-                 F.col("o_orderpriority").alias("order_priority"))
-        .agg((F.sum(_revenue_cents()) / 10000.0).alias("revenue"))
-        .select("order_key", "revenue", "order_date", "order_priority")
-        .orderBy(F.desc("revenue"), F.asc("order_key"))
-        .limit(10)
-    )
-
-
-def tpch_q3_rawscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw-table twin of tpch_q3_shipping_priority (the pre-r9 catalog
-    plan): identical semantics over unbucketed scans — the orderkey join
-    shuffles both fact sides.  Kept for the layout both-numbers receipt
-    and the equivalence pytest (tests/test_bucketing.py)."""
-    cust = load_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = load_table(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1997-01-01")
-    li = load_table(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1997-01-01")
-    return (
-        cust.join(orders, cust.c_custkey == orders.o_custkey)
-        .join(li, li.l_orderkey == orders.o_orderkey)
         .groupBy(F.col("l_orderkey").alias("order_key"),
                  F.col("o_orderdate").cast("date").alias("order_date"),
                  F.col("o_orderpriority").alias("order_priority"))
@@ -375,9 +352,7 @@ def tpch_q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFram
     customer dim joins the tiny qualifying set (aggregate-reuse is
     standard engine optimization; the oracle stays the naive rejoin SQL
     and results hash-match).  The semi-join operator shape this row used
-    to carry stays gated by tpch_q21's left_semi + left_anti pair.
-    tpch_q18_rawscan keeps the pre-r9 raw-table plan for the layout
-    receipt and equivalence pytest."""
+    to carry stays gated by tpch_q21's left_semi + left_anti pair."""
     from .reference_surface import bucketed_order_marts
 
     o, li = bucketed_order_marts(spark, sf_dir)
@@ -396,47 +371,6 @@ def tpch_q18_large_volume_customer(spark: SparkSession, sf_dir: str) -> DataFram
                 F.col("o_orderdate").cast("date").alias("order_date"),
                 F.col("o_totalprice").alias("total_price"),
                 F.col("total_qty"))
-        .orderBy(F.desc("total_price"), F.asc("order_key"))
-        .limit(100)
-    )
-
-
-def tpch_q18_rawscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw-table twin of tpch_q18_large_volume_customer (the pre-r9
-    catalog plan, semi-join + rescan shape) for the layout receipt and
-    the equivalence pytest."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # spread the HAVING-aggregate's input: the local single-row-group scan
-    # is one task, and the qty rollup over all of lineitem is the query's
-    # dominant stage (measured 0.84s -> 0.58s at sf0.1; no-op on
-    # cluster-width scans).  After repartition(l_orderkey) the aggregate is
-    # partition-local — no further exchange.
-    big = (
-        spread(li.select("l_orderkey", "l_quantity"), "l_orderkey")
-        .groupBy("l_orderkey")
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("qty"))
-        .filter(F.col("qty") > 300)
-        .select("l_orderkey")
-    )
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    # Explicitly broadcast `big` into BOTH semi filters (orders AND the
-    # lineitem rescan): AQE can only discover the broadcast after a full
-    # shuffle materializes, and the rescan otherwise re-shuffles all of
-    # lineitem into the final join — 1.7x at sf1 (1.64s -> 0.97s).
-    li_sel = li.join(F.broadcast(big), li.l_orderkey == big.l_orderkey,
-                     "left_semi")
-    return (
-        orders.join(F.broadcast(big), orders.o_orderkey == big.l_orderkey,
-                    "left_semi")
-        .join(cust, cust.c_custkey == orders.o_custkey)
-        .join(li_sel, orders.o_orderkey == li_sel.l_orderkey)
-        .groupBy(F.col("c_name").alias("customer_name"),
-                 F.col("c_custkey").alias("customer_key"),
-                 F.col("o_orderkey").alias("order_key"),
-                 F.col("o_orderdate").cast("date").alias("order_date"),
-                 F.col("o_totalprice").alias("total_price"))
-        .agg(F.sum(F.col("l_quantity").cast("long")).alias("total_qty"))
         .orderBy(F.desc("total_price"), F.asc("order_key"))
         .limit(100)
     )

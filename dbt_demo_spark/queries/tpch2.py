@@ -180,73 +180,8 @@ def tpch_q9_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB a fact side never fits a broadcast, so the local plan is the
     cluster plan.  q8 measured the same rewrite and KEPT its original
     plan — its part-filter-first join order prunes lineitem 6x before
-    the orders join, and both mart variants tied or lost (receipt).
-    tpch_q9_rawscan keeps the original plan for the equivalence
-    pytest."""
+    the orders join, and both mart variants tied or lost (receipt)."""
     return tpch_q9_mart(spark, sf_dir)
-
-
-def tpch_q9_rawscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw-table twin of tpch_q9_product_profit (the pre-r12 plan) for
-    the Q8Q9_RECEIPT comparison and the equivalence pytest."""
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%"))
-    li = load_table(spark, sf_dir, "lineitem")
-    s = load_table(spark, sf_dir, "supplier")
-    o = load_table(spark, sf_dir, "orders")
-    n = load_table(spark, sf_dir, "nation")
-    profit_units = _revenue_cents() - (
-        scaled_long(F.col("p_retailprice")) * F.col("l_quantity").cast("long") * 100)
-    # part/supplier scale with sf — let AQE pick the join strategy (see q8)
-    return (
-        p.join(li, p.p_partkey == li.l_partkey)
-        .join(s, s.s_suppkey == li.l_suppkey)
-        .join(o, o.o_orderkey == li.l_orderkey)
-        .join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .groupBy(F.col("n_name").alias("nation_name"),
-                 F.year("o_orderdate").alias("o_year"))
-        .agg((F.sum(profit_units) / 10000.0).alias("profit"))
-    )
-
-
-def tpch_q8_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q8 over the orderkey-BUCKETED marts — MEASURED AND REJECTED
-    (r12, Q8Q9_RECEIPT.json): q8's current plan broadcasts the
-    date-filtered orders fact (458k rows at sf1), and this variant's
-    merge join streams ALL 6M lineitem rows through the SMJ before the
-    part filter can prune them, losing 0.50 -> 0.65s; a part-probe-first
-    + merge variant tied the current plan within noise (0.657 vs 0.630
-    min).  Kept for the receipt's reproducibility.  q9 — whose broadcast
-    side was the UNFILTERED 1.5M-row orders fact and whose part filter
-    prunes less — flipped the other way and was adopted."""
-    from .reference_surface import bucketed_order_marts
-
-    o_mart, li = bucketed_order_marts(spark, sf_dir)
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO")
-    s = load_table(spark, sf_dir, "supplier")
-    o_f = o_mart.filter(
-        (F.col("o_orderdate") >= "1996-01-01")
-        & (F.col("o_orderdate") < "1998-01-01"))
-    c = load_table(spark, sf_dir, "customer")
-    n1 = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("n1_key"),
-        F.col("n_regionkey").alias("n1_region"))
-    n2 = load_table(spark, sf_dir, "nation").select(
-        F.col("n_nationkey").alias("n2_key"),
-        F.col("n_name").alias("supp_nation"))
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    vol = _revenue_cents()
-    nat5 = F.when(F.col("supp_nation") == "NATION_5", vol).otherwise(F.lit(0))
-    return (
-        o_f.join(li.hint("merge"), o_f.o_orderkey == li.l_orderkey)
-        .join(p, F.col("l_partkey") == p.p_partkey)
-        .join(s, s.s_suppkey == F.col("l_suppkey"))
-        .join(c, F.col("o_custkey") == c.c_custkey)
-        .join(F.broadcast(n1), c.c_nationkey == F.col("n1_key"))
-        .join(F.broadcast(r), F.col("n1_region") == r.r_regionkey)
-        .join(F.broadcast(n2), s.s_nationkey == F.col("n2_key"))
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(round2(F.sum(nat5) * 100.0 / F.sum(vol)).alias("mkt_share_pct"))
-    )
 
 
 def tpch_q9_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,7 +189,7 @@ def tpch_q9_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     3): the sf1 plan audit showed q9 broadcasting the UNFILTERED ORDERS
     fact — a 1.5M-row HashedRelation rebuilt every execution
     (Q8Q9_RECEIPT.json).  The merge hint pins the exchange-free bucket
-    join instead; part/supplier as in tpch_q8_mart."""
+    join instead; part/supplier as in tpch_q8_market_share."""
     from .reference_surface import bucketed_order_marts
 
     o_mart, li = bucketed_order_marts(spark, sf_dir)
@@ -426,7 +361,7 @@ def cube_pricing_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtotal disambiguation is unchanged.  100 TB note: this rewrite is
     right ONLY while |grain| << |fact| — for high-cardinality grouping
     keys the grain approaches the fact and the single-pass Expand plan
-    (kept as cube_pricing_levels_expand below) wins.  ROLLUP and explicit
+    (plain cube() over the fact) wins.  ROLLUP and explicit
     GROUPING SETS keep their own Expand-plan DuckDB differentials in
     tests/test_sql_surface.py."""
     li = load_table(spark, sf_dir, "lineitem").filter(
@@ -445,26 +380,6 @@ def cube_pricing_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
              F.sum("q").alias("sum_qty"),
              (F.sum("r") / 10000.0).alias("revenue"),
              F.sum("n").alias("n_lines"))
-    )
-
-
-def cube_pricing_levels_expand(spark: SparkSession, sf_dir: str
-                               ) -> DataFrame:
-    """Single-pass Expand twin of cube_pricing_levels — the plan Spark
-    gives cube() natively, and the RIGHT plan when grouping keys are
-    high-cardinality (the grain pre-agg's premise |grain| << |fact|
-    fails).  Kept for the CUBE_RECEIPT comparison and the equivalence
-    pytest."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") <= "1998-09-02")
-    qty = F.col("l_quantity").cast("long")
-    return (
-        li.cube(F.col("l_returnflag").alias("return_flag"),
-                F.col("l_linestatus").alias("line_status"))
-        .agg(F.grouping_id().cast("int").alias("lvl"),
-             F.sum(qty).alias("sum_qty"),
-             (F.sum(_revenue_cents()) / 10000.0).alias("revenue"),
-             F.count(F.lit(1)).alias("n_lines"))
     )
 
 
@@ -739,8 +654,7 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     r8 item 2): all four orderkey joins (inner + semi + anti + the
     late/l2/l3 self-references) read co-located buckets with no exchange;
     only the small supplier join and the final name aggregate move data.
-    The oracle computes the identical result from raw tables;
-    tpch_q21_rawscan keeps the unbucketed twin for the layout receipt."""
+    The oracle computes the identical result from raw tables."""
     from .reference_surface import bucketed_order_marts
 
     ob, li = bucketed_order_marts(spark, sf_dir)
@@ -762,31 +676,6 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(l3, (F.col("l3.l_orderkey") == F.col("l1.l_orderkey"))
               & (F.col("l3.l_suppkey") != F.col("l1.l_suppkey")), "left_anti")
         # supplier scales with sf — AQE decides (see q8)
-        .join(s, s.s_suppkey == F.col("l1.l_suppkey"))
-        .groupBy(F.col("s_name").alias("supplier_name"))
-        .agg(F.count(F.lit(1)).alias("numwait"))
-    )
-
-
-def tpch_q21_rawscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw-table twin of tpch_q21_waiting_suppliers (the pre-r9 catalog
-    plan): identical semantics over unbucketed scans for the layout
-    both-numbers receipt and the equivalence pytest."""
-    li = load_table(spark, sf_dir, "lineitem")
-    late = li.filter(F.col("l_shipdate") > "1997-06-01").select(
-        "l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderstatus") == "F")
-    s = load_table(spark, sf_dir, "supplier")
-    l1 = late.alias("l1")
-    l2 = li.select("l_orderkey", "l_suppkey").alias("l2")
-    l3 = late.alias("l3")
-    return (
-        l1.join(o, F.col("l1.l_orderkey") == o.o_orderkey)
-        .join(l2, (F.col("l2.l_orderkey") == F.col("l1.l_orderkey"))
-              & (F.col("l2.l_suppkey") != F.col("l1.l_suppkey")), "left_semi")
-        .join(l3, (F.col("l3.l_orderkey") == F.col("l1.l_orderkey"))
-              & (F.col("l3.l_suppkey") != F.col("l1.l_suppkey")), "left_anti")
         .join(s, s.s_suppkey == F.col("l1.l_suppkey"))
         .groupBy(F.col("s_name").alias("supplier_name"))
         .agg(F.count(F.lit(1)).alias("numwait"))
@@ -833,10 +722,10 @@ def tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (all suppliers at the minimum), and no DISTINCT is needed because
     the mart's grain already is part x supplier.  The plan is: pruned
     mart scan -> window MIN -> broadcast dim joins -> top-100.
-    Receipts: two-scan rejoin 0.503s -> raw single-pass 0.283s (both
-    kept below as twins) -> this.  Exact integer units keep
-    min-equality tie-safe; the oracle still computes from raw lineitem
-    so layout can never change answers."""
+    Receipts: two-scan rejoin 0.503s -> raw single-pass 0.283s -> this
+    (Q2_RECEIPT.json; both earlier plans are retired).  Exact integer
+    units keep min-equality tie-safe; the oracle still computes from raw
+    lineitem so layout can never change answers."""
     from pyspark.sql.window import Window
 
     p = load_table(spark, sf_dir, "part").filter(F.col("p_size").isin(5, 10))
@@ -915,91 +804,6 @@ def partsupp_offer_mart(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out[name]
 
 
-def tpch_q2_rejoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2 raw-table twin #1 (the pre-r13 catalog plan): decorrelated
-    per-group MIN rejoined on equality — TWO lineitem scans.  Kept for
-    Q2_RECEIPT.json and the equivalence pytest."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_size").isin(5, 10))
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    # Aggregation pushdown Catalyst won't do alone: only ~4% of parts
-    # survive the size filter, so the per-part MIN (and the rejoin scan)
-    # run over a broadcast-semi-filtered lineitem instead of all of it —
-    # 2.2x at sf1 (2.08s -> 0.93s), and the cut grows with part
-    # selectivity at scale.
-    li_sel = li.join(F.broadcast(p.select("p_partkey")),
-                     li.l_partkey == F.col("p_partkey"), "left_semi")
-    part_cost = (
-        li_sel.groupBy(F.col("l_partkey").alias("pc_partkey"))
-        .agg(F.min(scaled_long(F.col("l_extendedprice"))).alias("min_cost_units"))
-    )
-    # second lineitem scan aliased: part_cost above derives from the same
-    # relation, and the min-equality rejoin must reference THIS copy
-    lx = li_sel.select(F.col("l_partkey").alias("lx_partkey"),
-                       F.col("l_suppkey").alias("lx_suppkey"),
-                       scaled_long(F.col("l_extendedprice")).alias("lx_cost"))
-    return (
-        p.join(part_cost, F.col("pc_partkey") == p.p_partkey)
-        .join(lx, (F.col("lx_partkey") == p.p_partkey)
-              & (F.col("lx_cost") == F.col("min_cost_units")))
-        .join(s, s.s_suppkey == F.col("lx_suppkey"))
-        .join(F.broadcast(n), n.n_nationkey == s.s_nationkey)
-        .select(F.col("p_partkey").alias("part_key"),
-                F.col("p_name").alias("part_name"),
-                F.col("s_name").alias("supplier_name"),
-                F.col("n_name").alias("nation_name"),
-                (F.col("min_cost_units") / 100.0).alias("min_cost"))
-        .distinct()
-        .orderBy(F.asc("min_cost"), F.asc("part_key"), F.asc("supplier_name"))
-        .limit(100)
-    )
-
-
-def tpch_q2_singlepass(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2 single-scan twin (Q2_RECEIPT, VERDICT r12 item 1): the shipped
-    plan scans lineitem TWICE (per-part MIN, then the min-equality
-    rejoin).  This variant scans it once: a (partkey, suppkey) pre-agg
-    with map-side combine collapses the fact to supplier-offer grain
-    (which also absorbs the DISTINCT — the output grain IS
-    part x supplier), then a window MIN over partkey keeps the
-    tie-complete winner set without a self-join.  The window's exchange
-    moves only the reduced offer frame, never fact rows; ties survive
-    (all suppliers at the per-part minimum), matching the rejoin's
-    semantics exactly.  At 100 TB: one fact scan instead of two, and
-    the only all-to-all movement is offer-grain."""
-    from pyspark.sql.window import Window
-
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_size").isin(5, 10))
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    li_sel = li.join(F.broadcast(p.select("p_partkey")),
-                     li.l_partkey == F.col("p_partkey"), "left_semi")
-    offers = (
-        li_sel.groupBy("l_partkey", "l_suppkey")
-        .agg(F.min(scaled_long(F.col("l_extendedprice"))).alias("cost_units"))
-    )
-    w = Window.partitionBy("l_partkey")
-    winners = (
-        offers.withColumn("min_cost_units", F.min("cost_units").over(w))
-        .filter(F.col("cost_units") == F.col("min_cost_units"))
-        .select("l_partkey", "l_suppkey", "min_cost_units")
-    )
-    return (
-        winners.join(F.broadcast(p), F.col("l_partkey") == p.p_partkey)
-        .join(s, s.s_suppkey == F.col("l_suppkey"))
-        .join(F.broadcast(n), n.n_nationkey == s.s_nationkey)
-        .select(F.col("p_partkey").alias("part_key"),
-                F.col("p_name").alias("part_name"),
-                F.col("s_name").alias("supplier_name"),
-                F.col("n_name").alias("nation_name"),
-                (F.col("min_cost_units") / 100.0).alias("min_cost"))
-        .orderBy(F.asc("min_cost"), F.asc("part_key"), F.asc("supplier_name"))
-        .limit(100)
-    )
-
-
 @query(
     "tpch_q11_important_parts",
     oracle=f"""
@@ -1025,28 +829,11 @@ def tpch_q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange-free over the l_partkey-bucketed mart — reproduces the raw
     SUM bit-identically (long addition is associative).  The threshold
     side reuses the same aggregate (ReusedExchange); exact integer units
-    on both sides of the comparison.  tpch_q11_rawscan keeps the raw
-    fact-scan plan for the receipt and equivalence pytest."""
+    on both sides of the comparison."""
     offers = partsupp_offer_mart(spark, sf_dir)
     pr = (
         offers.groupBy(F.col("l_partkey").alias("part_key"))
         .agg(F.sum("revenue_units").alias("units"))
-    )
-    threshold = pr.agg((F.sum("units") * 0.0005).alias("thr"))
-    return (
-        pr.join(F.broadcast(threshold), F.col("units") > F.col("thr"))
-        .select("part_key", (F.col("units") / 10000.0).alias("part_value"))
-    )
-
-
-def tpch_q11_rawscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q11 raw-table twin (the pre-r13 catalog plan): per-part revenue
-    aggregated from the lineitem fact per execution.  Kept for
-    Q11_HOURLY_RECEIPT.json and the equivalence pytest."""
-    li = load_table(spark, sf_dir, "lineitem")
-    pr = (
-        li.groupBy(F.col("l_partkey").alias("part_key"))
-        .agg(F.sum(_revenue_cents()).alias("units"))
     )
     threshold = pr.agg((F.sum("units") * 0.0005).alias("thr"))
     return (

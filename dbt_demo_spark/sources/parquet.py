@@ -72,8 +72,6 @@ TESTDATA_TABLES = (
     "orders", "lineitem", "events", "documents", "embeddings",
 )
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Scan-DataFrame memo: `spark.read.parquet` re-lists the path and re-reads
 # the parquet footer on EVERY call (~0.1s driver-side), so a 50-query
 # catalog pass pays seconds of pure constant re-deriving identical scan

@@ -14,7 +14,7 @@ from dataclasses import dataclass
 
 import duckdb
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 
 from .sources.parquet import TESTDATA_TABLES
 
@@ -126,21 +126,3 @@ def compare(name: str, spark_df: DataFrame, con: duckdb.DuckDBPyConnection,
         return CompareResult(name, False, len(s_rows), len(o_rows),
                              f"value mismatch, first diffs: {diffs}")
     return CompareResult(name, True, len(s_rows), len(o_rows))
-
-
-def run_catalog(spark: SparkSession, sf_dir: str,
-                only: list[str] | None = None) -> list[CompareResult]:
-    from .queries import CATALOG
-
-    con = duckdb_connection(sf_dir)
-    results = []
-    for name, spec in CATALOG.items():
-        if only and name not in only:
-            continue
-        if spec.oracle is None:
-            continue
-        try:
-            results.append(compare(name, spec.fn(spark, sf_dir), con, spec.oracle))
-        except Exception as e:  # surface, don't abort the sweep
-            results.append(CompareResult(name, False, -1, -1, f"exception: {e}"))
-    return results

@@ -1,7 +1,7 @@
 """Persisted BM25 corpus-stats index (operators/bm25.py, r13 — VERDICT
-r12 item 6): served == inline on the gate corpus; two-batch incremental
-ingest reproduces one-shot stats bit-for-bit; absent terms contribute
-zero exactly like the inline row."""
+r12 item 6): served == the DuckDB oracle on the gate corpus; two-batch
+incremental ingest reproduces one-shot stats bit-for-bit; absent terms
+contribute zero."""
 
 from __future__ import annotations
 
@@ -10,9 +10,10 @@ import pyspark.sql.functions as F
 from dbt_demo_spark.operators.bm25 import (Bm25StatsIndex, bm25_topk_served,
                                            build_bm25_stats,
                                            ingest_bm25_stats)
-from dbt_demo_spark.queries.text_filters import (
-    BM25_QUERY_TERMS, corpus_bm25_topk_inline)
+from dbt_demo_spark.queries.text_filters import (BM25_QUERY_TERMS,
+                                                 CORPUS_BM25_ORACLE)
 from dbt_demo_spark.sources.parquet import load_table
+from dbt_demo_spark.testing import compare, duckdb_connection
 from tests.conftest import SF_GATE
 
 
@@ -22,13 +23,17 @@ def _docs(spark):
 
 def test_served_matches_inline_on_gate_corpus(spark, tmp_path):
     """The index-served scorer returns the identical ordered k-set and
-    scores as the inline catalog row — the stats pass is replaced by a
-    metadata-weight index read, nothing else changes."""
+    scores as the DuckDB oracle, which computes the stats inline from
+    the raw table — the stats pass is replaced by a metadata-weight
+    index read, nothing else changes."""
     docs = _docs(spark)
     idx = build_bm25_stats(docs, str(tmp_path / "bm25"))
-    inline = corpus_bm25_topk_inline(spark, SF_GATE).collect()
-    served = bm25_topk_served(spark, docs, idx, BM25_QUERY_TERMS).collect()
-    assert [tuple(r) for r in served] == [tuple(r) for r in inline]
+    served = bm25_topk_served(spark, docs, idx, BM25_QUERY_TERMS)
+    con = duckdb_connection(SF_GATE)
+    res = compare("bm25_topk_served", served, con, CORPUS_BM25_ORACLE)
+    assert res.ok, res.detail
+    assert ([tuple(r) for r in served.collect()]
+            == con.execute(CORPUS_BM25_ORACLE).fetchall())
 
 
 def test_two_batch_ingest_equals_one_shot(spark, tmp_path):
@@ -52,17 +57,22 @@ def test_two_batch_ingest_equals_one_shot(spark, tmp_path):
         i.term_df_path).collect()))
     assert tdf(inc) == tdf(one)
 
-    # and the incrementally-maintained index serves the same top-k
-    served_inc = bm25_topk_served(spark, docs, inc,
+    # and the incrementally-maintained index serves the oracle's top-k,
+    # in the one-shot index's order
+    served_inc = bm25_topk_served(spark, docs, inc, BM25_QUERY_TERMS)
+    res = compare("bm25_topk_served_incremental", served_inc,
+                  duckdb_connection(SF_GATE), CORPUS_BM25_ORACLE)
+    assert res.ok, res.detail
+    served_one = bm25_topk_served(spark, docs, one,
                                   BM25_QUERY_TERMS).collect()
-    inline = corpus_bm25_topk_inline(spark, SF_GATE).collect()
-    assert [tuple(r) for r in served_inc] == [tuple(r) for r in inline]
+    assert ([tuple(r) for r in served_inc.collect()]
+            == [tuple(r) for r in served_one])
 
 
 def test_absent_term_contributes_zero(spark, tmp_path):
     """A query term no document contains (df=0, tf=0 everywhere) leaves
-    every score unchanged — the same behavior the inline row's
-    when(tf > 0) gives such a term."""
+    every score unchanged — the when(tf > 0) guard zeroes such a term
+    exactly as the oracle's CASE does."""
     docs = _docs(spark)
     idx = build_bm25_stats(docs, str(tmp_path / "bm25"))
     base = bm25_topk_served(spark, docs, idx, BM25_QUERY_TERMS).collect()

@@ -74,6 +74,54 @@ def test_bucketed_write_is_one_file_per_bucket(spark, bucketed_rels, tmp_path):
     buckets = {f.rsplit("_", 1)[-1].split(".")[0] for f in files}
     assert len(buckets) == 4               # one file per distinct bucket id
 
+    # partition_by + bucket_by: each write task still holds one bucket, but
+    # writes one file per partition directory — so a bucket is one file per
+    # directory.  The join stays exchange-free; the scan claims its sortBy
+    # order only when pruning leaves one directory, so an unpruned read
+    # keeps the per-query Sort.
+    import re
+
+    from dbt_demo_spark.sources.parquet import load_table
+    from tests.conftest import SF_SMOKE
+
+    reg = ModelRegistry()
+
+    @reg.model("orders_pb", deps=("orders",), materialized="table",
+               partition_by=("o_orderstatus",), bucket_by=("o_orderkey",),
+               n_buckets=4)
+    def orders_pb(refs):
+        return refs["orders"].select("o_orderkey", "o_orderstatus")
+
+    orders = load_table(spark, SF_SMOKE, "orders")
+    n_dirs = orders.select("o_orderstatus").distinct().count()
+    runner = Runner(spark, reg, warehouse_dir=str(tmp_path / "pb"))
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        pb = runner.run({"orders": orders})["orders_pb"]
+        ids_by_dir: dict[str, list[str]] = {}
+        for f in pb.inputFiles():
+            d, base = f.rsplit("/", 2)[-2:]
+            ids_by_dir.setdefault(d, []).append(
+                base.rsplit("_", 1)[-1].split(".")[0])
+        assert len(ids_by_dir) == n_dirs > 1
+        for d, ids in ids_by_dir.items():
+            assert len(ids) == len(set(ids)) == 4, (d, ids)
+
+        def join_plan(df):
+            j = df.alias("a").join(df.alias("b"), "o_orderkey")
+            return j._jdf.queryExecution().executedPlan().toString()
+
+        plan = join_plan(pb)
+        assert "Exchange" not in plan, plan
+        assert re.search(r"\bSort \[", plan), plan
+        pruned = join_plan(pb.filter(F.col("o_orderstatus") == "F"))
+        assert "Exchange" not in pruned, pruned
+        assert not re.search(r"\bSort \[", pruned), pruned
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        runner.clean()
+
 
 def test_bucketed_contents_round_trip(spark, bucketed_rels):
     rels, sales, _, _ = bucketed_rels
@@ -231,51 +279,6 @@ def test_two_runners_same_model_name_do_not_clobber(spark, tmp_path):
         r1.clean()
 
 
-def test_layout_served_tpch_rows_match_rawscan_twins(spark):
-    """The r9 layout decision (VERDICT r8 item 2): the catalog's q3/q18/q21
-    are served from orderkey-bucketed marts; their raw-table twins must
-    produce identical rows at the driver's gate scale — layout (and the
-    q18 aggregate-reuse rewrite) must never change answers.  The DuckDB
-    oracle over raw tables remains the primary gate (test_catalog_parity);
-    this pins the Spark-vs-Spark pair the both-numbers receipt
-    (LAYOUT_DECISION.json) relies on."""
-    from dbt_demo_spark.queries import CATALOG
-    from dbt_demo_spark.queries.tpch import (tpch_q3_rawscan,
-                                             tpch_q18_rawscan)
-    from dbt_demo_spark.queries.tpch2 import (tpch_q9_rawscan,
-                                              tpch_q21_rawscan)
-    from tests.conftest import SF_GATE
-
-    for name, raw in (("tpch_q3_shipping_priority", tpch_q3_rawscan),
-                      ("tpch_q18_large_volume_customer", tpch_q18_rawscan),
-                      ("tpch_q21_waiting_suppliers", tpch_q21_rawscan),
-                      ("tpch_q9_product_profit", tpch_q9_rawscan)):
-        served = CATALOG[name].fn(spark, SF_GATE)
-        twin = raw(spark, SF_GATE)
-        assert served.columns == twin.columns, name
-        a = sorted(map(tuple, served.collect()))
-        b = sorted(map(tuple, twin.collect()))
-        assert a == b, f"{name}: layout-served result diverged from rawscan"
-
-
-def test_cube_grain_preagg_matches_expand_twin(spark):
-    """r12 (VERDICT r11 item 2): cube_pricing_levels is served as a
-    finest-grain pre-agg + cube-over-the-grain (CUBE_RECEIPT.json, sf1
-    0.618 -> 0.294s); the native single-Expand twin must produce
-    identical rows — the algebraic rewrite must never change answers.
-    The DuckDB oracle remains the primary gate."""
-    from dbt_demo_spark.queries import CATALOG
-    from dbt_demo_spark.queries.tpch2 import cube_pricing_levels_expand
-    from tests.conftest import SF_GATE
-
-    served = CATALOG["cube_pricing_levels"].fn(spark, SF_GATE)
-    twin = cube_pricing_levels_expand(spark, SF_GATE)
-    assert served.columns == twin.columns
-    key = lambda r: tuple((v is None, str(v)) for v in r)  # noqa: E731
-    a = sorted(map(tuple, served.collect()), key=key)
-    b = sorted(map(tuple, twin.collect()), key=key)
-    assert a == b, "grain pre-agg cube diverged from Expand plan"
-
 def test_hourly_rollup_null_user_matches_count_distinct(spark, tmp_path):
     """ADVICE r13 (low): events with NULL user_id.  COUNT(DISTINCT
     user_id) ignores NULLs, so the mart-served n_users must count only
@@ -322,24 +325,18 @@ def test_hourly_rollup_null_user_matches_count_distinct(spark, tmp_path):
 
 
 def test_r13_mart_served_rows_match_rawscan_twins(spark):
-    """r13 (VERDICT r12 items 1-2): q2/q11 serve from the partsupp offer
-    mart (the reconstructed TPC-H partsupp, Q2_RECEIPT.json) and
-    events_hourly_rollup from the (hour,type,user) grain mart
-    (Q11_HOURLY_RECEIPT.json); every raw-table twin must produce
-    identical rows at the gate scale — layout never changes answers.
-    The DuckDB oracle over raw tables remains the primary gate."""
+    """r13 (VERDICT r12 items 1-2): events_hourly_rollup serves from the
+    (hour,type,user) grain mart (Q11_HOURLY_RECEIPT.json) and
+    sim_topk_lsh from the persisted LSH index; each raw-scan twin must
+    produce identical rows at the gate scale — layout never changes
+    answers.  The DuckDB oracle over raw tables remains the primary
+    gate."""
     from dbt_demo_spark.queries import CATALOG
     from dbt_demo_spark.queries.llm_pipeline import (
         events_hourly_rollup_rawscan, sim_topk_lsh_inline)
-    from dbt_demo_spark.queries.tpch2 import (tpch_q2_rejoin,
-                                              tpch_q2_singlepass,
-                                              tpch_q11_rawscan)
     from tests.conftest import SF_GATE
 
     for name, raw in (
-            ("tpch_q2_min_cost_supplier", tpch_q2_rejoin),
-            ("tpch_q2_min_cost_supplier", tpch_q2_singlepass),
-            ("tpch_q11_important_parts", tpch_q11_rawscan),
             ("events_hourly_rollup", events_hourly_rollup_rawscan),
             ("sim_topk_lsh", sim_topk_lsh_inline)):
         served = CATALOG[name].fn(spark, SF_GATE)

@@ -233,99 +233,6 @@ def test_embedding_near_dups_indexed_equals_inline(spark, tmp_path):
     assert "BroadcastHashJoin" in plan          # deliberate join strategy
 
 
-def test_ann_dispatch_crossover_pinned():
-    """Cost-based serving dispatch (r14, VERDICT r13 item 4): the
-    receipted cost model must reproduce SESSION_LSH_RECEIPT's honest
-    finding — at the receipt's exact operating point (2 000 queries x
-    100 000 vectors, INLINE) brute force wins (measured 0.578s vs
-    0.656s) — and must flip to LSH on the other side of the crossover:
-    a 10x corpus inline, or the SAME operating point once the corpus
-    bucketize pass is paid into a persisted index."""
-    # the receipt's operating point: brute wins inline
-    assert similarity.choose_ann_path(2_000, 100_000) == "brute"
-    # past the inline crossover (|Q| tracks the catalog's 2% sampling)
-    assert similarity.choose_ann_path(20_000, 1_000_000) == "lsh"
-    # same receipt point but indexed: corpus pass already paid -> lsh
-    assert similarity.choose_ann_path(2_000, 100_000,
-                                      indexed=True) == "lsh"
-    # tiny corpus, even indexed: exact brute is also the cheaper plan
-    assert similarity.choose_ann_path(10, 500, indexed=True) == "brute"
-    # the model is calibrated, not just ordered: at the receipt point
-    # its absolute estimates land within 2x of the measured walls
-    c = similarity.estimate_ann_costs(2_000, 100_000)
-    assert 0.29 < c["brute"] < 1.16     # measured 0.578
-    assert 0.33 < c["lsh"] < 1.31      # measured 0.656
-
-    # three-way dispatch (ANN_DISPATCH_RECEIPT.json): at its operating
-    # point (400 x 20k, both indexes offered) indexed LSH won the
-    # measured walls (0.53s vs brute 0.72 vs IVF 2.27) — and the model
-    # agrees that IVF never beats LSH at the default 16-cluster
-    # geometry (candidates ~ n_c/8 per query vs ~17 x n_c / 2^16)
-    assert similarity.choose_ann_path(400, 20_000, indexed=True,
-                                      ivf_clusters=16) == "lsh"
-    # IVF earns the dispatch where its geometry is right: huge corpus,
-    # small query set, fine-grained clusters, and no LSH index on offer
-    # (inline LSH would re-bucketize the whole corpus)
-    assert similarity.choose_ann_path(100, 10_000_000,
-                                      ivf_clusters=1024) == "ivf"
-
-
-def test_ann_dispatch_runs_the_chosen_plan(spark, tmp_path):
-    """sim_topk_dispatch returns (result, chosen) and the DataFrame's
-    physical plan IS the chosen path: brute = Arrow scorer, no bucket
-    join; lsh = bucket equi-join (indexed here, corpus side a plain
-    scan).  Results equal the direct operator calls."""
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    q = emb.filter("vec_id % 100 = 0")
-
-    out, chosen = similarity.sim_topk_dispatch(q, emb, k=5)
-    assert chosen == "brute"            # smoke scale: below crossover
-    plan = (out._jdf.queryExecution().executedPlan().toString()
-            .split("== Initial Plan ==")[0])
-    assert "Join" not in plan
-    want = sorted(map(tuple,
-                      similarity.brute_force_topk_arrow(q, emb, k=5)
-                      .collect()))
-    assert sorted(map(tuple, out.collect())) == want
-
-    # force the lsh side of the dispatch via the count overrides (the
-    # smoke corpus is tiny; the decision logic is what's under test)
-    idx = similarity.build_lsh_index(emb, str(tmp_path / "lsh"))
-    out2, chosen2 = similarity.sim_topk_dispatch(
-        q, emb, k=5, index=idx, n_queries=2_000, n_corpus=100_000)
-    assert chosen2 == "lsh"
-    plan2 = (out2._jdf.queryExecution().executedPlan().toString()
-             .split("== Initial Plan ==")[0])
-    assert "bucket" in plan2
-    assert plan2.count("MapInArrow") == 1   # query side only
-    want2 = sorted(map(tuple,
-                       similarity.lsh_topk_indexed(q, idx, k=5)
-                       .collect()), key=lambda t: t[:2])
-    assert sorted(map(tuple, out2.collect()),
-                  key=lambda t: t[:2]) == want2
-
-    # ivf dispatch: the geometry where IVF wins is fine-grained
-    # clusters + huge corpus + small query set (see the crossover
-    # test).  A deterministic 1024-centroid index over the smoke
-    # corpus gives the dispatcher that cluster count; count overrides
-    # put the decision on IVF's side, and the plumbing must run the
-    # IVF plan and match the direct call.
-    from dbt_demo_spark.functions.vectors import DIM
-    from dbt_demo_spark.operators import ivf
-
-    cents = [[((i * 31 + j * 7) % 17) / 17.0 + 0.01 for j in range(DIM)]
-             for i in range(1024)]
-    ividx = ivf.build_index(emb, str(tmp_path / "ivf"), centroids=cents)
-    out3, chosen3 = similarity.sim_topk_dispatch(
-        q, emb, k=5, ivf_index=ividx,
-        n_queries=100, n_corpus=100_000_000)
-    assert chosen3 == "ivf"
-    want3 = sorted(map(tuple, ivf.ivf_topk_indexed(q, ividx, k=5)
-                       .collect()), key=lambda t: t[:2])
-    assert sorted(map(tuple, out3.collect()),
-                  key=lambda t: t[:2]) == want3
-
-
 def test_multiprobe_expands_single_probe_candidates(spark):
     """Multi-probe (Hamming-1) candidate pairs are a strict superset of the
     same-bucket pairs, and still a small fraction of the full cross

@@ -194,11 +194,9 @@ def test_bm25_topk_matches_oracle_and_plan(spark):
     rounded-score+doc_id order), plus the scale-shape asserts.  The
     catalog row serves stats from the persisted index as plan LITERALS
     (r13) — its plan must show no explode, no extra exchange at all
-    (the stats pass is gone), and TakeOrdered; the inline twin keeps
-    the 1-row stats broadcast shape and its own differential."""
+    (the stats pass is gone), and TakeOrdered."""
     from dbt_demo_spark.queries.text_filters import (CORPUS_BM25_ORACLE,
-                                                     corpus_bm25_topk,
-                                                     corpus_bm25_topk_inline)
+                                                     corpus_bm25_topk)
 
     con = duckdb_connection(SF_GATE)
     out = corpus_bm25_topk(spark, SF_GATE)
@@ -209,15 +207,6 @@ def test_bm25_topk_matches_oracle_and_plan(spark):
     assert "BroadcastExchange" not in plan  # stats are literals now
     assert "Exchange hashpartitioning" not in plan
     assert "TakeOrderedAndProject" in plan  # top-k, not global sort
-
-    inline = corpus_bm25_topk_inline(spark, SF_GATE)
-    res_i = compare("corpus_bm25_topk_inline", inline, con,
-                    CORPUS_BM25_ORACLE)
-    assert res_i.ok, res_i.detail
-    iplan = inline._jdf.queryExecution().executedPlan().toString()
-    assert "Generate" not in iplan
-    assert "BroadcastExchange" in iplan    # inline: 1-row stats broadcast
-    assert "TakeOrderedAndProject" in iplan
     # larger scale too: same differential at sf0.1 for the catalog row
     con1 = duckdb_connection("/root/testdata/sf0.1")
     res1 = compare("corpus_bm25_topk_sf01",
@@ -226,18 +215,13 @@ def test_bm25_topk_matches_oracle_and_plan(spark):
     assert res1.ok, res1.detail
 
 
-def test_lang_id_row_local_matches_exploded_twin(spark):
+def test_lang_id_plan_is_row_local(spark):
     """r12: text_lang_id serves a zero-shuffle row-local vote
-    (LANGID_RECEIPT.json, sf1 0.57 -> 0.26s); the pre-r12 exploded plan
-    must produce identical rows — ties, unknowns, and counts included.
-    The DuckDB oracle stays the primary gate."""
-    from dbt_demo_spark.queries.llm_pipeline import (text_lang_id,
-                                                     text_lang_id_exploded)
+    (LANGID_RECEIPT.json, sf1 0.57 -> 0.26s) — no explode and no
+    exchange.  Its rows are pinned by the DuckDB oracle
+    (test_catalog_parity)."""
+    from dbt_demo_spark.queries.llm_pipeline import text_lang_id
 
-    new = text_lang_id(spark, SF_GATE)
-    old = text_lang_id_exploded(spark, SF_GATE)
-    assert new.columns == old.columns
-    assert sorted(map(tuple, new.collect())) == \
-        sorted(map(tuple, old.collect()))
-    plan = new._jdf.queryExecution().executedPlan().toString()
+    plan = text_lang_id(spark, SF_GATE)._jdf.queryExecution(
+        ).executedPlan().toString()
     assert "Exchange" not in plan and "Generate" not in plan
