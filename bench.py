@@ -247,12 +247,6 @@ def main() -> None:
     from dbt_demo_spark.queries.catalog import \
         NON_RELATIONAL_QUERIES as NON_RELATIONAL
 
-    # Opt-in SHARED-SCAN mode (VERDICT r6 item 3): serve the whole catalog
-    # batch from cached column-pruned scans (workload.py) — each source
-    # decoded once per pass instead of once per query.  Kept off by
-    # default; the plain mode stays the number of record.
-    shared_mode = os.environ.get("SPARK_GRAFT_SHARED_SCAN", "") == "1"
-
     # Build each query's DataFrame ONCE and re-execute the handle: every
     # `.write` still runs the full JVM pipeline (analysis result is cached on
     # the handle, but optimization, physical planning, AQE re-planning and
@@ -306,100 +300,82 @@ def main() -> None:
     # its two samples sit a full catalog pass apart.  The DuckDB side of
     # tools/scale_bench.py uses the same pass count, so cross-engine
     # ratios stay symmetric.
-    from contextlib import nullcontext
+    def timed_region() -> dict:
+        """One full measurement: sync, probe, power pass (min of 3),
+        throughput pass (min of 3), probe again.  The probe pair
+        brackets everything timed, so a ratio beyond PROBE_RATIO_MAX
+        proves the machine changed speed mid-measurement."""
+        # Flush filesystem writeback BEFORE the clock starts (r13):
+        # handle construction above just (re)wrote the bucketed/grain
+        # marts and ANN indexes into .mart_cache, and a PRIOR process
+        # may have left its own dirty pages — background writeback then
+        # competes with the timed reads of those same files.  r13
+        # measured the pattern: the first bench after another Spark JVM
+        # read ~13.8s sequential vs 10.9s on the immediate re-run, with
+        # the CPU probe IDENTICAL (0.17s both) and the inflation
+        # concentrated in mart/index-reading rows.  sync() moves the
+        # flush off the clock deterministically.
+        os.sync()
+        time.sleep(2.0)
+        probe_before = machine_probe()
+        passes = []
+        for _ in range(3):
+            spark._jvm.System.gc()
+            time.sleep(1.0)
+            passes.append({name: run(name) for name in names})
+        timings = {name: round(min(p[name] for p in passes), 3)
+                   for name in names}
+        # THROUGHPUT: full workload concurrently, wall-clock; best of 3
+        # passes to damp thread-scheduler/GC/ambient noise (r6 measured
+        # back-to-back full-bench walls spanning 3.8-8.5s under
+        # shared-host load; the DuckDB side of tools/scale_bench.py
+        # uses the same pass count).
+        walls = []
+        passes_attrib = []
+        for _ in range(3):
+            t0 = time.perf_counter()
+            spans: list[tuple[str, float, float]] = []
 
-    if shared_mode:
-        from dbt_demo_spark.sources.parquet import shared_scans
-        from dbt_demo_spark.workload import batch_footprint
+            def timed_run(name: str, _t0=t0, _spans=spans) -> None:
+                s = time.perf_counter() - _t0
+                run(name)
+                _spans.append((name, s, time.perf_counter() - _t0))
 
-        footprint = batch_footprint(dfs, sf_dir)
-        scan_ctx = shared_scans(spark, sf_dir, footprint)
-    else:
-        scan_ctx = nullcontext()
+            with ThreadPoolExecutor(threads) as ex:
+                list(ex.map(timed_run, names))
+            wall = time.perf_counter() - t0
+            walls.append(wall)
+            passes_attrib.append(
+                {"wall": round(wall, 3), **straggler_report(spans)})
+        probe_after = machine_probe()
+        return {
+            "queries": timings,
+            "sequential_total_sec": round(sum(timings.values()), 3),
+            "sequential_relational_sec": round(
+                sum(t for n, t in timings.items()
+                    if n not in NON_RELATIONAL), 3),
+            "value": round(min(walls), 3),
+            # per-pass critical path (VERDICT r14 item 5): which query
+            # finished LAST in each concurrent pass — the wall's pole —
+            # so throughput claims are attributable, not anecdotal
+            "throughput_passes": passes_attrib,
+            "probe": [probe_before, probe_after],
+            "machine_contaminated": probe_contaminated(
+                probe_before, probe_after),
+        }
 
-    with scan_ctx:
-        if shared_mode:
-            # DataFrames bind their scans at construction — rebuild inside
-            # the block so every query reads the cached projections
-            dfs.update({n: CATALOG[n].fn(spark, sf_dir) for n in names
-                        if n not in two_pass})
-
-        def timed_region() -> dict:
-            """One full measurement: sync, probe, power pass (min of 3),
-            throughput pass (min of 3), probe again.  The probe pair
-            brackets everything timed, so a ratio beyond PROBE_RATIO_MAX
-            proves the machine changed speed mid-measurement."""
-            # Flush filesystem writeback BEFORE the clock starts (r13):
-            # handle construction above just (re)wrote the bucketed/grain
-            # marts and ANN indexes into .mart_cache, and a PRIOR process
-            # may have left its own dirty pages — background writeback then
-            # competes with the timed reads of those same files.  r13
-            # measured the pattern: the first bench after another Spark JVM
-            # read ~13.8s sequential vs 10.9s on the immediate re-run, with
-            # the CPU probe IDENTICAL (0.17s both) and the inflation
-            # concentrated in mart/index-reading rows.  sync() moves the
-            # flush off the clock deterministically.
-            os.sync()
-            time.sleep(2.0)
-            probe_before = machine_probe()
-            passes = []
-            for _ in range(3):
-                spark._jvm.System.gc()
-                time.sleep(1.0)
-                passes.append({name: run(name) for name in names})
-            timings = {name: round(min(p[name] for p in passes), 3)
-                       for name in names}
-            # THROUGHPUT: full workload concurrently, wall-clock; best of 3
-            # passes to damp thread-scheduler/GC/ambient noise (r6 measured
-            # back-to-back full-bench walls spanning 3.8-8.5s under
-            # shared-host load; the DuckDB side of tools/scale_bench.py
-            # uses the same pass count).
-            walls = []
-            passes_attrib = []
-            for _ in range(3):
-                t0 = time.perf_counter()
-                spans: list[tuple[str, float, float]] = []
-
-                def timed_run(name: str, _t0=t0, _spans=spans) -> None:
-                    s = time.perf_counter() - _t0
-                    run(name)
-                    _spans.append((name, s, time.perf_counter() - _t0))
-
-                with ThreadPoolExecutor(threads) as ex:
-                    list(ex.map(timed_run, names))
-                wall = time.perf_counter() - t0
-                walls.append(wall)
-                passes_attrib.append(
-                    {"wall": round(wall, 3), **straggler_report(spans)})
-            probe_after = machine_probe()
-            return {
-                "queries": timings,
-                "sequential_total_sec": round(sum(timings.values()), 3),
-                "sequential_relational_sec": round(
-                    sum(t for n, t in timings.items()
-                        if n not in NON_RELATIONAL), 3),
-                "value": round(min(walls), 3),
-                # per-pass critical path (VERDICT r14 item 5): which query
-                # finished LAST in each concurrent pass — the wall's pole —
-                # so throughput claims are attributable, not anecdotal
-                "throughput_passes": passes_attrib,
-                "probe": [probe_before, probe_after],
-                "machine_contaminated": probe_contaminated(
-                    probe_before, probe_after),
-            }
-
-        # Measure; if the probe pair flags contamination, re-run the whole
-        # timed region ONCE (the r13 writeback/co-tenant pressure that
-        # produced the 19.2s phantom drains within one full pass) — the
-        # retry's own probes decide whether the flag sticks.
-        attempts = [timed_region()]
-        if attempts[0]["machine_contaminated"]:
-            print(json.dumps({
-                "event": "probe_contamination_retry",
-                "probe": attempts[0]["probe"],
-                "discarded_value": attempts[0]["value"],
-            }), file=sys.stderr)
-            attempts.append(timed_region())
+    # Measure; if the probe pair flags contamination, re-run the whole
+    # timed region ONCE (the r13 writeback/co-tenant pressure that
+    # produced the 19.2s phantom drains within one full pass) — the
+    # retry's own probes decide whether the flag sticks.
+    attempts = [timed_region()]
+    if attempts[0]["machine_contaminated"]:
+        print(json.dumps({
+            "event": "probe_contamination_retry",
+            "probe": attempts[0]["probe"],
+            "discarded_value": attempts[0]["value"],
+        }), file=sys.stderr)
+        attempts.append(timed_region())
 
     chosen = pick_attempt(attempts)
     timings = chosen["queries"]
@@ -449,7 +425,6 @@ def main() -> None:
         "throughput_threads": threads,
         "unit": "sec",
         "sf": sf,
-        "shared_scans": shared_mode,
         "relational_note": (
             "sequential_relational_sec excludes "
             f"{sorted(NON_RELATIONAL)} — the text/list rows that dominate "

@@ -233,7 +233,6 @@ class Runner:
             select: list[str] | str | None = None,
             exclude: str | None = None,
             threads: int = 1,
-            cache_sources: bool = False,
             refresh: str = "full",
             state: dict | None = None,
             full_refresh: bool = False,
@@ -268,8 +267,8 @@ class Runner:
         warehouse state.
 
         ``threads`` > 1 runs INDEPENDENT DAG branches concurrently — the
-        dbt ``threads`` profile setting [public knowledge]: a model is
-        submitted to the pool the moment its refs are built, so sibling
+        dbt ``threads`` profile setting [public knowledge]: a model
+        starts once its refs are built and a thread is free, so sibling
         staging models and independent mart writes overlap wall-clock.
         Spark job submission is thread-safe; each materialization is its
         own job, and on a busy cluster ``spark.scheduler.mode=FAIR`` keeps
@@ -277,16 +276,10 @@ class Runner:
         still overlaps I/O + planning, which is most of what small models
         pay).  Results are identical to the sequential order because the
         dependency gate, not submission order, decides when a model
-        runs (tested with a diamond DAG).
-
-        ``cache_sources`` is the shared-scan idea (workload.run_workload)
-        applied to a mart refresh: every SOURCE relation is persisted
-        (Spark's default MEMORY_AND_DISK) for the run's duration, so N
-        models fanning out from the same raw tables decode each source
-        once instead of once per model — and unpersisted afterwards, win
-        or lose, so the run leaves no cache dependence behind.  Worth
-        switching on when several independent marts read the same sources
-        (the refresh shape); a single-consumer DAG gains nothing.
+        runs (tested with a diamond DAG).  ``run`` and ``build`` share
+        that scheduler (``_build_loop``); ``run`` rebuilds every selected
+        model, even one passed in ``sources``, runs no tests, and the
+        first model error propagates with its own type.
 
         ``refresh="changed"`` skips rebuilding a materialized model whose
         whole upstream state is IDENTICAL to its last build — the
@@ -308,49 +301,9 @@ class Runner:
         -> rebuilt, never guessed.  ``last_refresh_report`` lists what
         was built vs skipped.  ``build`` extends the same rule to data
         tests: see there."""
-        if refresh not in ("full", "changed"):
-            raise ValueError(f"refresh must be 'full' or 'changed', "
-                             f"got {refresh!r}")
-        if isinstance(select, str) or exclude:
-            from .selection import select_nodes
-
-            if isinstance(select, list):
-                # legacy exact-name list, narrowed by the exclude grammar
-                keep = set(select_nodes(self.registry, None, exclude,
-                                        state=state))
-                select = [n for n in select if n in keep]
-            else:
-                select = select_nodes(self.registry, select, exclude,
-                                      state=state)
-        self._refresh_changed = refresh == "changed"
-        self._full_refresh = full_refresh
-        self._empty = empty
-        self._batch_id = batch_id
-        self._fp_memo: dict[str, str | None] = {}
-        self._ledger = {}
-        self.last_refresh_report = {"built": [], "skipped": []}
-        caches = []
-        if cache_sources:
-            for df in sources.values():
-                caches.append(df.persist())
-        out: dict[str, DataFrame] | None = None
-        try:
-            self._run_hooks(self.on_run_start, "run", dict(sources))
-            if threads <= 1:
-                relations: dict[str, DataFrame] = dict(sources)
-                for name in self.registry.topo_order(select):
-                    relations[name] = self._build_model(name, relations)
-                out = relations
-            else:
-                out = self._run_parallel(sources, select, threads)
-            return out
-        finally:
-            for df in caches:
-                df.unpersist()
-            # on_run_end sees whatever completed (dbt passes results);
-            # it runs even when the pass raised, like dbt's
-            self._run_hooks(self.on_run_end, "run",
-                            out if out is not None else dict(sources))
+        select = self._start(select, exclude, state, refresh,
+                             full_refresh, empty, batch_id)
+        return self._build_loop(sources, select, threads, as_run=True)[0]
 
     def build(self, sources: dict[str, DataFrame],
               select: list[str] | str | None = None,
@@ -397,46 +350,11 @@ class Runner:
         ``run_results.json`` row) is also a build-ledger entry:
         ``reused`` (served from recorded build state), and the ``files``
         and ``bytes`` of the data files in its table directory."""
-        if refresh not in ("full", "changed"):
-            raise ValueError(f"refresh must be 'full' or 'changed', "
-                             f"got {refresh!r}")
-        if isinstance(select, str) or exclude:
-            from .selection import select_nodes
-
-            if isinstance(select, list):
-                keep = set(select_nodes(self.registry, None, exclude,
-                                        state=state))
-                select = [n for n in select if n in keep]
-            else:
-                select = select_nodes(self.registry, select, exclude,
-                                      state=state)
-        self._refresh_changed = refresh == "changed"
-        self._full_refresh = full_refresh
-        self._empty = empty
-        self._batch_id = None
-        self._fp_memo = {}
-        self._ledger = {}
-        self.last_refresh_report = {"built": [], "skipped": [],
-                                    "tests_reused": []}
-
-        relations: dict[str, DataFrame] = dict(sources)
-        nodes: dict[str, NodeResult] = {}
-        poisoned: set[str] = set()        # failed or skipped node names
-        built: set[str] = set(sources)    # names whose relation is usable
-
-        # a registered model arriving pre-built in ``sources`` (the retry
-        # path seeds prior successes this way) is an artifact to REUSE,
-        # not a node to rebuild — dbt retry's contract
-        try:
-            self._run_hooks(self.on_run_start, "run", dict(sources))
-            pending = [n for n in self.registry.topo_order(select)
-                       if n not in built]
-            self._build_loop(pending, built, poisoned, relations, nodes,
-                             threads)
-        finally:
-            # audit hooks must see failures AND aborts (r11 review: a
-            # selector typo after on_run_start skipped the end hook)
-            self._run_hooks(self.on_run_end, "run", dict(relations))
+        select = self._start(select, exclude, state, refresh,
+                             full_refresh, empty, None)
+        self.last_refresh_report["tests_reused"] = []
+        relations, nodes = self._build_loop(sources, select, threads,
+                                            as_run=False)
         result = BuildResult(relations=relations, nodes=nodes)
         # the dbt run_results.json artifact, refreshed per invocation
         os.makedirs(self.warehouse_dir, exist_ok=True)
@@ -447,66 +365,134 @@ class Runner:
                    os.path.join(self.warehouse_dir, "run_results.json"))
         return result
 
-    def _build_loop(self, pending, built, poisoned, relations, nodes,
-                    threads) -> None:
+    def _start(self, select, exclude, state, refresh: str,
+               full_refresh: bool, empty: bool,
+               batch_id: int | None) -> list[str] | None:
+        """The preamble ``run`` and ``build`` share: check ``refresh``,
+        resolve the selection grammar (before any hook runs, so a
+        selector typo raises first), and reset the per-run state.
+        Returns the selected names (None = every model)."""
+        if refresh not in ("full", "changed"):
+            raise ValueError(f"refresh must be 'full' or 'changed', "
+                             f"got {refresh!r}")
+        if isinstance(select, str) or exclude:
+            from .selection import select_nodes
+
+            if isinstance(select, list):
+                # legacy exact-name list, narrowed by the exclude grammar
+                keep = set(select_nodes(self.registry, None, exclude,
+                                        state=state))
+                select = [n for n in select if n in keep]
+            else:
+                select = select_nodes(self.registry, select, exclude,
+                                      state=state)
+        self._refresh_changed = refresh == "changed"
+        self._full_refresh = full_refresh
+        self._empty = empty
+        self._batch_id = batch_id
+        self._fp_memo = {}
+        self._ledger = {}
+        self.last_refresh_report = {"built": [], "skipped": []}
+        return select
+
+    def _build_loop(self, sources: dict[str, DataFrame],
+                    select: list[str] | None, threads: int,
+                    as_run: bool) -> tuple[dict[str, DataFrame],
+                                           dict[str, NodeResult]]:
+        """The one DAG scheduler, under ``run`` and ``build``: a node
+        starts once every dep is built, at most ``threads`` at a time,
+        and of the ready nodes the first in topological order starts
+        first — so ``threads=1`` builds in exactly ``topo_order``.  The
+        run hooks bracket the pass; ``on_run_end`` sees what completed,
+        also when the pass raised.  Returns (relations, node results).
+
+        ``build`` (``as_run=False``) runs each node's attached tests,
+        records a raising model or failing test as ``fail`` and its
+        descendants as ``skipped``, and reuses a registered model
+        arriving pre-built in ``sources`` (the retry path seeds prior
+        successes this way — dbt retry's contract).  ``run``
+        (``as_run=True``) rebuilds every selected node, runs no tests,
+        and re-raises the first model error."""
         from concurrent.futures import (FIRST_COMPLETED, ThreadPoolExecutor,
                                         wait)
+
+        threads = max(1, threads)
+        relations: dict[str, DataFrame] = dict(sources)
+        nodes: dict[str, NodeResult] = {}
+        poisoned: set[str] = set()        # failed or skipped node names
 
         def work(name: str):
             t0 = time.perf_counter()
             df = self._build_model(name, dict(relations))
             mdef = self.registry[name]
             trs: list[DataTestResult] = []
-            if mdef.tests:
+            if mdef.tests and not as_run:
                 rel = dict(relations)
                 rel[name] = df
                 trs = self._run_tests(name, list(mdef.tests), rel)
             return df, trs, time.perf_counter() - t0
 
-        with ThreadPoolExecutor(max(1, threads)) as ex:
-            in_flight: dict = {}
-            while pending or in_flight:
-                still = []
-                for n in pending:
-                    deps = self.registry[n].deps
-                    if any(d in poisoned for d in deps):
-                        nodes[n] = NodeResult(n, "skipped")
-                        poisoned.add(n)
-                    elif all(d in built for d in deps):
-                        in_flight[ex.submit(work, n)] = n
-                    else:
-                        still.append(n)
-                if len(still) == len(pending) and not in_flight:
-                    missing = {n: [d for d in self.registry[n].deps
-                                   if d not in built and d not in poisoned]
-                               for n in still}
-                    raise KeyError(f"unresolved refs: {missing}")
-                pending = still
-                if not in_flight:
-                    continue    # a skip cascade may unblock more skips
-                done, _ = wait(in_flight, return_when=FIRST_COMPLETED)
-                for fut in done:
-                    name = in_flight.pop(fut)
-                    try:
-                        df, trs, secs = fut.result()
-                    except Exception as exc:  # noqa: BLE001 — per-node report
-                        nodes[name] = NodeResult(
-                            name, "fail",
-                            error=f"{type(exc).__name__}: {exc}")
-                        poisoned.add(name)
-                        continue
-                    relations[name] = df
-                    # warn-severity test failures record but never gate
-                    # (dbt severity: warn [public knowledge])
-                    led = self._ledger.get(name, {})
-                    if all(t.gating for t in trs):
-                        nodes[name] = NodeResult(name, "success", tests=trs,
-                                                 seconds=secs, **led)
-                        built.add(name)
-                    else:
-                        nodes[name] = NodeResult(name, "fail", tests=trs,
-                                                 seconds=secs, **led)
-                        poisoned.add(name)
+        try:
+            self._run_hooks(self.on_run_start, "run", dict(sources))
+            pending = [n for n in self.registry.topo_order(select)
+                       if as_run or n not in relations]
+            # names whose relation is usable; a source that run rebuilds
+            # is not usable until its rebuild lands
+            built = set(relations).difference(pending)
+            with ThreadPoolExecutor(threads) as ex:
+                in_flight: dict = {}
+                while pending or in_flight:
+                    still = []
+                    for n in pending:
+                        deps = self.registry[n].deps
+                        if any(d in poisoned for d in deps):
+                            nodes[n] = NodeResult(n, "skipped")
+                            poisoned.add(n)
+                        elif (len(in_flight) < threads
+                              and all(d in built for d in deps)):
+                            in_flight[ex.submit(work, n)] = n
+                        else:
+                            still.append(n)
+                    if len(still) == len(pending) and not in_flight:
+                        missing = {n: [d for d in self.registry[n].deps
+                                       if d not in built
+                                       and d not in poisoned]
+                                   for n in still}
+                        raise KeyError(f"unresolved refs: {missing}")
+                    pending = still
+                    if not in_flight:
+                        continue    # a skip cascade may unblock more skips
+                    done, _ = wait(in_flight, return_when=FIRST_COMPLETED)
+                    for fut in done:
+                        name = in_flight.pop(fut)
+                        try:
+                            df, trs, secs = fut.result()
+                        except Exception as exc:  # noqa: BLE001 — per-node report
+                            if as_run:
+                                raise
+                            nodes[name] = NodeResult(
+                                name, "fail",
+                                error=f"{type(exc).__name__}: {exc}")
+                            poisoned.add(name)
+                            continue
+                        relations[name] = df
+                        # warn-severity test failures record but never gate
+                        # (dbt severity: warn [public knowledge])
+                        led = self._ledger.get(name, {})
+                        if all(t.gating for t in trs):
+                            nodes[name] = NodeResult(name, "success",
+                                                     tests=trs, seconds=secs,
+                                                     **led)
+                            built.add(name)
+                        else:
+                            nodes[name] = NodeResult(name, "fail", tests=trs,
+                                                     seconds=secs, **led)
+                            poisoned.add(name)
+        finally:
+            # audit hooks must see failures AND aborts (r11 review: a
+            # selector typo after on_run_start skipped the end hook)
+            self._run_hooks(self.on_run_end, "run", dict(relations))
+        return relations, nodes
 
     def retry(self, sources: dict[str, DataFrame], prior: "BuildResult",
               threads: int = 1) -> "BuildResult":
@@ -917,40 +903,6 @@ class Runner:
         self.last_refresh_report["built"].append(name)
         self._record_build(name, mdef, relations, df)
         return df
-
-    def _run_parallel(self, sources: dict[str, DataFrame],
-                      select: list[str] | None,
-                      threads: int) -> dict[str, DataFrame]:
-        from concurrent.futures import (FIRST_COMPLETED, ThreadPoolExecutor,
-                                        wait)
-
-        relations: dict[str, DataFrame] = dict(sources)
-        pending = list(self.registry.topo_order(select))
-        with ThreadPoolExecutor(threads) as ex:
-            in_flight: dict = {}
-            while pending or in_flight:
-                # a model is ready iff every ref resolves NOW; refs to
-                # not-yet-built models keep it pending
-                ready = [n for n in pending
-                         if all(d in relations
-                                for d in self.registry[n].deps)]
-                for n in ready:
-                    pending.remove(n)
-                    # snapshot the refs under the current relations state;
-                    # dict reads are safe — only this thread writes it
-                    in_flight[ex.submit(self._build_model, n,
-                                        dict(relations))] = n
-                if not in_flight:
-                    # nothing runnable and nothing running: unresolved refs
-                    missing = {n: [d for d in self.registry[n].deps
-                                   if d not in relations]
-                               for n in pending}
-                    raise KeyError(f"unresolved refs: {missing}")
-                done, _ = wait(in_flight, return_when=FIRST_COMPLETED)
-                for fut in done:
-                    name = in_flight.pop(fut)
-                    relations[name] = fut.result()  # re-raises model errors
-        return relations
 
     def _materialize_table(self, name: str, df: DataFrame,
                            partition_by: tuple[str, ...],

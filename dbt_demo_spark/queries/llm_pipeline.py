@@ -1168,9 +1168,8 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     total_value, same as the oracle's COUNT(*)/SUM), and n/value_units
     are associative long partials.  The DuckDB oracle still computes
     from raw events.  events_hourly_rollup_rawscan keeps the fact-scan
-    plan as the reference on the NULL-user fixture
-    (tests/test_bucketing.py) and as the raw-events scan in
-    tests/test_shared_scans.py."""
+    plan as the reference on the NULL-user fixture and at the gate
+    scale (tests/test_bucketing.py)."""
     g = hourly_user_grain_mart(spark, sf_dir)
     return (
         g.groupBy("hour_start", "event_type")
@@ -1183,8 +1182,10 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def events_hourly_rollup_rawscan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw-table twin of events_hourly_rollup (the pre-r13 catalog plan)
-    for Q11_HOURLY_RECEIPT.json and the equivalence pytest.  ``spread``
+    """Raw-table twin of events_hourly_rollup (the pre-r13 catalog plan):
+    the only reference for the served rows on tests/test_bucketing.py's
+    NULL-user fixture, which has no oracle, and the plan
+    Q11_HOURLY_RECEIPT.json measured against.  ``spread``
     parallelizes the partial aggregation past the one-task local scan
     (measured 0.43->0.22s at sf0.1; no-op on cluster-width scans)."""
     ev = spread(load_events(spark, sf_dir)

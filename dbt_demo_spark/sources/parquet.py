@@ -12,7 +12,6 @@ import functools
 import hashlib
 import os
 import threading
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -158,75 +157,6 @@ def spread(df: DataFrame, key: str,
         # one partition — exactly the serialization being removed
         return df.repartition(target, F.col(key))
     return df
-
-
-def _ordered(base: DataFrame, cols: list[str]) -> list[str]:
-    """Project a cached footprint in the SOURCE TABLE'S column order: the
-    footprint arrives as a sorted set, and serving columns in a different
-    order than the plain scan would change star-expansion / positional
-    schemas inside the block — the in/out contract is byte-identical
-    results (ADVICE r6)."""
-    want = set(cols)
-    out = [c for c in base.columns if c in want]
-    missing = want - set(out)
-    if missing:
-        raise ValueError(f"shared_scans: columns {sorted(missing)} not in "
-                         f"source table ({base.columns})")
-    return out
-
-
-@contextmanager
-def shared_scans(spark: SparkSession, sf_dir: str,
-                 columns: dict[str, list[str] | None]):
-    """Multi-query SHARED-SCAN mode: serve the named tables from a cached,
-    column-pruned in-memory copy for the duration of the block, so a batch
-    of queries decodes each parquet source ONCE instead of once per query.
-
-    ``columns``: table -> columns to cache (the UNION of what the batch
-    reads — tools/shared_scan_bench.py derives it from the batch's own
-    plans), or None for all columns.  ``"events"`` routes through
-    sources/events.load_events so the cached copy carries the normalized
-    ``ts``.
-
-    This is an EXPLICIT opt-in execution mode: the default path never
-    depends on caching (asserted by tests/test_plan_quality.py), queries
-    are byte-identical in and out of the block (tests/test_shared_scans),
-    and the cache is dropped and the plain scans restored on exit — even
-    on error.  At 100 TB the same mode caches narrow projections of the
-    batch's hot tables into the cluster's storage memory (MEMORY_AND_DISK
-    spills; a projection that doesn't fit degrades to disk-backed columnar
-    blocks, still decoded once) — the classic shared-scan / scan-sharing
-    technique expressed through Spark's own cache manager instead of a
-    custom operator."""
-    from . import events as _events
-
-    handles = []
-    try:
-        for name, cols in columns.items():
-            if name == "events":
-                key = (spark.sparkContext.applicationId, sf_dir)
-                base = _events.load_events(spark, sf_dir)
-                cached = (base.select(*_ordered(base, cols))
-                          if cols else base).persist()
-                old = _events._SCANS.get(key)
-                _events._SCANS[key] = cached
-                handles.append((_events._SCANS, key, old, cached))
-            else:
-                key = (spark.sparkContext.applicationId, sf_dir, name)
-                base = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-                cached = (base.select(*_ordered(base, cols))
-                          if cols else base).persist()
-                old = _SCANS.get(key)
-                _SCANS[key] = cached
-                handles.append((_SCANS, key, old, cached))
-        yield
-    finally:
-        for memo, key, old, cached in handles:
-            cached.unpersist()
-            if old is None:
-                memo.pop(key, None)
-            else:
-                memo[key] = old
 
 
 def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:

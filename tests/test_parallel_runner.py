@@ -1,7 +1,8 @@
-"""Parallel DAG execution (core/runner.py threads>1, the dbt `threads`
-profile analog): independent branches overlap wall-clock, dependency
-order is still honored, outputs are identical to the sequential run, and
-a failing model propagates."""
+"""Runner.run's DAG scheduling (core/runner.py ``_build_loop``, shared
+with Runner.build; ``threads`` is the dbt `threads` profile analog):
+independent branches overlap wall-clock at threads>1, dependency order is
+still honored, outputs are identical to the threads=1 run, and a failing
+model or an unresolved ref raises at any thread count."""
 
 from __future__ import annotations
 
@@ -119,9 +120,11 @@ def test_parallel_propagates_model_errors(spark, tmp_path):
         raise RuntimeError("model exploded")
 
     src = spark.range(3).select(F.col("id").alias("k"))
-    with pytest.raises(RuntimeError, match="model exploded"):
-        Runner(spark, reg, warehouse_dir=str(tmp_path)).run(
-            {"src": src}, threads=2)
+    # threads=1 is the sequential run, through the same loop as threads=2
+    for threads in (1, 2):
+        with pytest.raises(RuntimeError, match="model exploded"):
+            Runner(spark, reg, warehouse_dir=str(tmp_path / str(threads))
+                   ).run({"src": src}, threads=threads)
 
 
 def test_parallel_unresolved_refs_raise(spark, tmp_path):
@@ -131,42 +134,29 @@ def test_parallel_unresolved_refs_raise(spark, tmp_path):
     def m(refs):
         return refs["missing_src"]
 
-    with pytest.raises(KeyError, match="missing_src"):
-        Runner(spark, reg, warehouse_dir=str(tmp_path)).run({}, threads=2)
+    for threads in (1, 2):
+        with pytest.raises(KeyError, match="missing_src"):
+            Runner(spark, reg, warehouse_dir=str(tmp_path / str(threads))
+                   ).run({}, threads=threads)
 
 
-def test_cache_sources_identity_and_release(spark, tmp_path):
-    """run(cache_sources=True): identical outputs, and the source cache is
-    released after the run (no lingering cache dependence — the same
-    contract as shared_scans)."""
-    from pyspark import StorageLevel
-
+def test_run_rebuilds_a_model_passed_in_sources(spark, tmp_path):
+    """run rebuilds every selected model, even one handed in as a source,
+    and its dependents read the rebuilt relation at any thread count
+    (build instead reuses such a relation — the retry seed)."""
     reg = ModelRegistry()
 
-    @reg.model("m1", deps=("src",), materialized="table")
-    def m1(refs):
-        return refs["src"].groupBy().agg(F.sum("k").alias("s"))
+    @reg.model("stg", deps=("src",))
+    def stg(refs):
+        return refs["src"].withColumn("v", F.lit("rebuilt"))
 
-    @reg.model("m2", deps=("src",), materialized="table")
-    def m2(refs):
-        return refs["src"].groupBy().agg(F.count(F.lit(1)).alias("c"))
+    @reg.model("mart", deps=("stg",))
+    def mart(refs):
+        return refs["stg"]
 
-    src = spark.range(1000).select(F.col("id").alias("k"))
-    plain = Runner(spark, reg, warehouse_dir=str(tmp_path / "a")).run(
-        {"src": src})
-    cached = Runner(spark, reg, warehouse_dir=str(tmp_path / "b")).run(
-        {"src": src}, cache_sources=True, threads=2)
-    for m in ("m1", "m2"):
-        assert cached[m].collect() == plain[m].collect()
-    # cache released: storage level back to NONE
-    assert src.storageLevel == StorageLevel.NONE
-
-    # released on error too
-    @reg.model("boom2", deps=("src",))
-    def boom2(refs):
-        raise RuntimeError("nope")
-
-    with pytest.raises(RuntimeError):
-        Runner(spark, reg, warehouse_dir=str(tmp_path / "c")).run(
-            {"src": src}, cache_sources=True)
-    assert src.storageLevel == StorageLevel.NONE
+    src = spark.range(2).select(F.col("id").alias("k"))
+    stale = src.withColumn("v", F.lit("stale"))
+    for threads in (1, 2):
+        out = Runner(spark, reg, warehouse_dir=str(tmp_path / str(threads))
+                     ).run({"src": src, "stg": stale}, threads=threads)
+        assert {r.v for r in out["mart"].collect()} == {"rebuilt"}
