@@ -75,9 +75,10 @@ class NodeResult:
     error: str | None = None          # model exception, if any
     tests: list[DataTestResult] = field(default_factory=list)
     seconds: float = 0.0              # model + attached-test wall time
-    # per-artifact ledger of a table/incremental node (None otherwise):
-    # served from recorded build state, and the data files and bytes
-    # its table directory holds, from the build-state file stamps
+    # per-artifact ledger of a table/incremental node: served from
+    # recorded build state, and the data files and bytes its table
+    # directory holds, from the build-state file stamps (every other
+    # node: reused False, files and bytes None)
     reused: bool = False
     files: int | None = None
     bytes: int | None = None
@@ -177,6 +178,11 @@ class Runner:
         self._refresh_changed = False
         self._fp_memo: dict[str, str | None] = {}
         self._fp_lock = threading.Lock()
+        # in-process memo of served handles, kept across passes (run()'s
+        # refresh paragraph): model -> (key, DataFrame), where a table's
+        # key is (fingerprint, read-back schema, file stamps) and a view's
+        # or ephemeral's (fingerprint, upstream relations by reference)
+        self._served: dict[str, tuple] = {}
         self.last_refresh_report: dict = {"built": [], "skipped": []}
         # per-run artifact ledger: model -> NodeResult's reused/files/bytes
         self._ledger: dict[str, dict] = {}
@@ -220,6 +226,8 @@ class Runner:
 
     def _drop_state(self, name: str) -> None:
         self._save_state(name, None)
+        with self._fp_lock:
+            self._served.pop(name, None)
 
     def catalog_name(self, model_name: str) -> str:
         """The session-catalog table name a bucketed model materializes
@@ -300,7 +308,21 @@ class Runner:
         (non-file source, unreadable fn source, bucketed catalog table)
         -> rebuilt, never guessed.  ``last_refresh_report`` lists what
         was built vs skipped.  ``build`` extends the same rule to data
-        tests: see there."""
+        tests: see there.
+
+        A Runner that builds again in the same process also keeps the
+        handles its passes served, and a later ``refresh="changed"``
+        pass runs only the checks above before serving them again: a
+        table whose fingerprint, recorded schema and file stamps are the
+        ones its handle was made under gets that same handle (no
+        re-read), and a view without hooks whose fingerprint is
+        unchanged and whose every upstream relation is the same object
+        as last pass gets its previous handle (its fn does not run, so
+        a SQL model's text is not re-analyzed; its temp view is still
+        registered), and so does an ephemeral node.  This helps only a
+        Runner that builds again: a fresh Runner reads each skipped
+        table with its recorded schema as before.  ``full_refresh`` and
+        ``empty`` never serve from it."""
         select = self._start(select, exclude, state, refresh,
                              full_refresh, empty, batch_id)
         return self._build_loop(sources, select, threads, as_run=True)[0]
@@ -678,11 +700,40 @@ class Runner:
         stamps = self._file_stamps(path)
         if stamps != rec["files"]:
             return None
-        out = (self.spark.read.schema(StructType.fromJson(rec["schema"]))
-               .parquet(path))
+        # the handle made under this same record, by an earlier pass of
+        # this Runner, lists exactly these files: serve it again
+        key = (fp, rec["schema"], stamps)
+        hit = self._served.get(name)
+        if hit is not None and hit[0] == key:
+            out = hit[1]
+        else:
+            out = (self.spark.read.schema(StructType.fromJson(rec["schema"]))
+                   .parquet(path))
+            with self._fp_lock:
+                self._served[name] = (key, out)
         out.createOrReplaceTempView(name)
         self._note_ledger(name, True, stamps)
         return out
+
+    def _view_key(self, name: str, mdef,
+                  relations: dict[str, DataFrame]) -> tuple | None:
+        """refresh="changed": what a view's handle is memoized under
+        across this Runner's passes — its fingerprint and its upstream
+        relations, held by reference and compared with ``is``.  An
+        ephemeral node (a singular test's query too) follows the same
+        rule.  None = the memo does not apply: a stored materialization,
+        not a changed pass (``full_refresh`` and ``empty`` included), a
+        node with hooks (they run every pass), or an unknowable
+        fingerprint."""
+        if (mdef.materialized not in ("view", "ephemeral")
+                or not self._refresh_changed
+                or self._full_refresh or self._empty
+                or mdef.pre_hook or mdef.post_hook):
+            return None
+        fp = self._fingerprint(name, relations)
+        if fp is None:
+            return None
+        return fp, [relations[d] for d in mdef.deps]
 
     @staticmethod
     def _file_stamps(path: str) -> list[list]:
@@ -728,9 +779,12 @@ class Runner:
             return
         fp = self._fingerprint(name, relations)
         if fp is not None:
-            self._save_state(name, {"fingerprint": fp,
-                                    "schema": df.schema.jsonValue(),
+            schema = df.schema.jsonValue()
+            self._save_state(name, {"fingerprint": fp, "schema": schema,
                                     "files": stamps})
+            # seed the served-handle memo: the first refresh hits too
+            with self._fp_lock:
+                self._served[name] = ((fp, schema, stamps), df)
 
     @staticmethod
     def _enforce_contract(name: str, df: DataFrame,
@@ -794,6 +848,14 @@ class Runner:
         if skipped is not None:
             self.last_refresh_report["skipped"].append(name)
             return skipped
+        view_key = self._view_key(name, mdef, relations)
+        hit = self._served.get(name) if view_key is not None else None
+        if (hit is not None and hit[0][0] == view_key[0]
+                and all(a is b for a, b in zip(hit[0][1], view_key[1]))):
+            if mdef.materialized == "view":
+                hit[1].createOrReplaceTempView(name)
+            self.last_refresh_report["built"].append(name)
+            return hit[1]
         refs = {d: relations[d] for d in mdef.deps}
         if getattr(self, "_empty", False):
             # dbt --empty (X97): LIMIT 0 on every ref — the model's
@@ -896,6 +958,9 @@ class Runner:
             pass  # inlined into consumers; no view, no storage
         else:
             df.createOrReplaceTempView(name)
+        if view_key is not None:
+            with self._fp_lock:
+                self._served[name] = (view_key, df)
         if mdef.post_hook:
             rels = dict(relations)
             rels[name] = df
@@ -1707,4 +1772,6 @@ class Runner:
         for name in self._alias_views:
             self.spark.catalog.dropTempView(name)
         self._alias_views.clear()
+        with self._fp_lock:
+            self._served.clear()
         shutil.rmtree(self.warehouse_dir, ignore_errors=True)

@@ -11,6 +11,7 @@ from __future__ import annotations
 import os
 
 import pyspark.sql.functions as F
+import pytest
 
 from dbt_demo_spark.core.model import ModelRegistry
 from dbt_demo_spark.core.runner import Runner
@@ -593,3 +594,138 @@ def test_partitioned_and_widened_incremental_skip_with_read_back_schema(
     assert served["part"].schema == plain.schema
     assert plain.columns == ["k", "tag", "p"]
     assert sorted(served["part"].collect()) == sorted(plain.collect())
+
+
+# --------------------------------------------------------------------------
+# in-process memo: a Runner that builds again serves the handles its own
+# earlier passes made, once every refresh check has passed
+# --------------------------------------------------------------------------
+
+def test_second_noop_refresh_on_one_runner_serves_its_own_handles(
+        spark, tmp_path, monkeypatch):
+    from pyspark.sql import DataFrameReader, SparkSession
+
+    from dbt_demo_spark.core.sqlmodel import register_sql_model
+
+    wh = _tested_project(spark, tmp_path)
+    reg = _tested_registry(tmp_path)
+    register_sql_model(reg, "orders_by_status",
+                       "select status, count(*) as n "
+                       "from {{ ref('stg_orders') }} group by status")
+    models = {n for n in reg.names()
+              if reg[n].materialized in ("table", "view")}
+    assert models == {"stg_orders", "stg_customers", "orders_by_status",
+                      "fct_orders", "dim_customers"}
+    calls = {"parquet": 0, "sql": 0}
+
+    def counting(key, fn):
+        def wrapped(*args, **kwargs):
+            calls[key] += 1
+            return fn(*args, **kwargs)
+        return wrapped
+
+    monkeypatch.setattr(DataFrameReader, "parquet",
+                        counting("parquet", DataFrameReader.parquet))
+    monkeypatch.setattr(SparkSession, "sql",
+                        counting("sql", SparkSession.sql))
+    r = Runner(spark, reg, wh)
+    sources = _tested_sources(spark, tmp_path)
+    first = r.build(sources, refresh="changed")
+    report = dict(r.last_refresh_report)
+    # a fresh Runner reads each skipped table and analyzes the SQL view
+    assert calls["parquet"] >= 2 and calls["sql"] >= 1
+    calls.update(parquet=0, sql=0)
+
+    before = _job_ids(spark)
+    second = r.build(sources, refresh="changed")
+    assert _job_ids(spark) - before == set()
+    assert calls == {"parquet": 0, "sql": 0}
+    for name in models:
+        assert second.relations[name] is first.relations[name], name
+    assert r.last_refresh_report == report
+    assert second.ok and second.to_json()["counts"] == \
+        first.to_json()["counts"]
+    assert sorted(second.relations["orders_by_status"].collect()) == [
+        ("F", 6), ("O", 6)]
+
+
+@pytest.mark.parametrize("case", ["deleted_part_file", "refiltered_source",
+                                  "full_refresh", "empty", "post_hook"])
+def test_one_runner_serves_rebuilt_rows_not_memoized_handles(
+        spark, tmp_path, case):
+    _write_orders(spark, str(tmp_path / "orders"))
+    _write_customers(spark, str(tmp_path / "customers"))
+    reg = _tested_registry(tmp_path)
+    hook_calls = []
+
+    def count_hook(spark, relations):
+        hook_calls.append(relations["hooked_orders"])
+
+    @reg.model("hooked_orders", deps=("stg_orders",), materialized="view",
+               post_hook=(count_hook,))
+    def hooked_orders(refs):
+        return refs["stg_orders"].filter(F.col("status") == "F")
+
+    tables, views = ("fct_orders", "dim_customers"), ("stg_orders",
+                                                     "stg_customers")
+    r = Runner(spark, reg, str(tmp_path / "wh"))
+    sources = _tested_sources(spark, tmp_path)
+    built = r.build(sources)
+    served = r.build(sources, refresh="changed")
+    assert built.ok and served.ok
+    # the build seeded the memo: the first refresh serves its tables
+    for t in tables:
+        assert served.relations[t] is built.relations[t], t
+    assert len(hook_calls) == 2
+
+    if case == "deleted_part_file":
+        path = os.path.join(str(tmp_path / "wh"), "fct_orders")
+        for f in os.listdir(path):
+            if f.startswith("part-"):
+                os.remove(os.path.join(path, f))
+        res = r.build(sources, refresh="changed")
+        assert r.last_refresh_report["skipped"] == ["dim_customers"]
+        fresh, kept = {"fct_orders"}, {"dim_customers", *views}
+        want = {"fct_orders": 12}
+    elif case == "refiltered_source":
+        res = r.build(dict(sources, orders=spark.read.parquet(
+            str(tmp_path / "orders")).filter("order_id < 6")),
+            refresh="changed")
+        assert r.last_refresh_report["skipped"] == ["dim_customers"]
+        fresh = {"stg_orders", "fct_orders"}
+        kept = {"stg_customers", "dim_customers"}
+        want = {"stg_orders": 6, "fct_orders": 6}
+    elif case == "full_refresh":
+        res = r.build(sources, refresh="changed", full_refresh=True)
+        assert r.last_refresh_report["skipped"] == []
+        fresh, kept = {*tables, *views}, set()
+        want = {"fct_orders": 12, "dim_customers": 3}
+    elif case == "empty":
+        res = r.build(sources, refresh="changed", empty=True)
+        assert r.last_refresh_report["skipped"] == []
+        fresh, kept = {*tables, *views}, set()
+        want = dict.fromkeys((*tables, *views), 0)
+        for n in want:
+            assert res.relations[n].schema == served.relations[n].schema, n
+    else:  # post_hook: a plain no-op refresh
+        res = r.build(sources, refresh="changed")
+        assert sorted(r.last_refresh_report["skipped"]) == sorted(tables)
+        fresh, kept = set(), {*tables, *views}
+        want = {"fct_orders": 12}
+
+    assert res.ok, res.to_json()
+    for n in fresh:
+        assert res.relations[n] is not served.relations[n], (case, n)
+    for n in kept:
+        assert res.relations[n] is served.relations[n], (case, n)
+    for n, rows in want.items():
+        assert res.relations[n].count() == rows, (case, n)
+    # the hooked view runs its fn and its hook on every pass
+    assert len(hook_calls) == 3
+    assert res.relations["hooked_orders"] is not \
+        served.relations["hooked_orders"]
+    assert hook_calls[-1] is res.relations["hooked_orders"]
+    # the pass after: served again, with every row of the real data
+    again = r.build(sources, refresh="changed")
+    assert again.ok and len(hook_calls) == 4
+    assert again.relations["fct_orders"].count() == 12
