@@ -178,6 +178,16 @@ class Runner:
         self._refresh_changed = False
         self._fp_memo: dict[str, str | None] = {}
         self._fp_lock = threading.Lock()
+        # the build state file as read once per pass (``_start``); a
+        # ``_save_state`` replaces it whole, never mutates it in place
+        self._state: dict = {}
+        # per-Runner memo of each model's own fingerprint part (params,
+        # fn / SQL / hook source text): name -> (ModelDef, parts), hit
+        # only for the same ModelDef object
+        self._own_parts: dict[str, tuple] = {}
+        # temp views this Runner registered: name -> (DataFrame, the
+        # session's raw view object), both held by reference (_register)
+        self._views: dict[str, tuple] = {}
         # in-process memo of served handles, kept across passes (run()'s
         # refresh paragraph): model -> (key, DataFrame), where a table's
         # key is (fingerprint, read-back schema, file stamps) and a view's
@@ -204,10 +214,12 @@ class Runner:
         """Record (or, with None, drop) one build-state entry: a model's
         build record (fingerprint, read-back schema, file stamps) under
         its name, or a node's passing test outcomes under
-        ``tests:<name>``.  Read-modify-write under the
+        ``tests:<name>``.  Read-modify-write of the FILE under the
         lock (parallel runs build disjoint models, but they share this
-        file); atomic rename so a crashed write can never half-corrupt
-        the JSON into false skips."""
+        file, and so may another Runner over the same warehouse); atomic
+        rename so a crashed write can never half-corrupt the JSON into
+        false skips.  The pass's cached copy is then replaced by what
+        was written."""
         with self._fp_lock:
             state = self._load_state()
             if value is None:
@@ -223,6 +235,7 @@ class Runner:
             with open(tmp, "w") as f:
                 json.dump(state, f)
             os.replace(tmp, self._state_path)
+            self._state = state
 
     def _drop_state(self, name: str) -> None:
         self._save_state(name, None)
@@ -311,18 +324,27 @@ class Runner:
         tests: see there.
 
         A Runner that builds again in the same process also keeps the
-        handles its passes served, and a later ``refresh="changed"``
-        pass runs only the checks above before serving them again: a
-        table whose fingerprint, recorded schema and file stamps are the
-        ones its handle was made under gets that same handle (no
-        re-read), and a view without hooks whose fingerprint is
-        unchanged and whose every upstream relation is the same object
-        as last pass gets its previous handle (its fn does not run, so
-        a SQL model's text is not re-analyzed; its temp view is still
-        registered), and so does an ephemeral node.  This helps only a
-        Runner that builds again: a fresh Runner reads each skipped
-        table with its recorded schema as before.  ``full_refresh`` and
-        ``empty`` never serve from it."""
+        handles its passes served (a full build's too), and a later
+        ``refresh="changed"`` pass runs only the checks above before
+        serving them again: a table whose fingerprint, recorded schema
+        and file stamps are the ones its handle was made under gets that
+        same handle (no re-read), and a view without hooks whose
+        fingerprint is unchanged and whose every upstream relation is
+        the same object as last pass gets its previous handle (its fn
+        does not run, so a SQL model's text is not re-analyzed), and so
+        does an ephemeral node.  A served handle's temp view is
+        registered again only when the session no longer holds the view
+        this Runner registered for it — the name was dropped, or
+        re-registered by anyone (another Runner, the user, an ``empty``
+        pass) — see ``_register``.  The Runner also computes each
+        model's own fingerprint part (params and source text) once per
+        ``ModelDef`` object, and reads ``_build_state.json`` once per
+        pass; upstream and source fingerprints (file stats, canonical
+        plan) and table file stamps are still checked on every pass, so
+        a touched source or a re-filtered handle rebuilds its cone.
+        This helps only a Runner that builds again: a fresh Runner reads
+        each skipped table with its recorded schema as before.
+        ``full_refresh`` and ``empty`` never serve from it."""
         select = self._start(select, exclude, state, refresh,
                              full_refresh, empty, batch_id)
         return self._build_loop(sources, select, threads, as_run=True)[0]
@@ -413,6 +435,7 @@ class Runner:
         self._empty = empty
         self._batch_id = batch_id
         self._fp_memo = {}
+        self._state = self._load_state()
         self._ledger = {}
         self.last_refresh_report = {"built": [], "skipped": []}
         return select
@@ -547,7 +570,7 @@ class Runner:
         key = f"tests:{name}"
         if (digest is not None and self._refresh_changed
                 and not self._full_refresh):
-            rec = self._load_state().get(key)
+            rec = self._state.get(key)
             if rec is not None and rec["digest"] == digest:
                 self.last_refresh_report["tests_reused"].extend(
                     [t.name for t in tests])
@@ -589,9 +612,9 @@ class Runner:
     def _fingerprint(self, name: str,
                      relations: dict[str, DataFrame]) -> str | None:
         """Build-state fingerprint of ``name``'s whole upstream cone: the
-        model fn's source text, its materialization params, every upstream
-        MODEL's fingerprint (recursively), and — per SOURCE relation —
-        both the (path, size, mtime_ns) of every file it scans
+        model's own part (``_own_part``), every upstream MODEL's
+        fingerprint (recursively), and — per SOURCE relation — both the
+        (path, size, mtime_ns) of every file it scans
         (``df.inputFiles()``; the local-FS stat here is the HDFS/S3
         FileStatus call at cluster scale) AND its CANONICALIZED logical
         plan (expression ids normalized, so it is stable across sessions):
@@ -604,7 +627,39 @@ class Runner:
             if name in self._fp_memo:
                 return self._fp_memo[name]
         mdef = self.registry[name]
-        parts = [name, mdef.materialized, ",".join(mdef.partition_by),
+        own = self._own_part(mdef)
+        parts = None if own is None else list(own)
+        if parts is not None:
+            for d in sorted(mdef.deps):
+                if d in self.registry:
+                    sub = self._fingerprint(d, relations)
+                    if sub is None:
+                        parts = None
+                        break
+                    parts.append(f"{d}:{sub}")
+                    continue
+                sub = self._source_fingerprint(d, relations[d])
+                if sub is None:
+                    parts = None
+                    break
+                parts.append(sub)
+        fp = (None if parts is None
+              else hashlib.sha1("\n".join(parts).encode()).hexdigest())
+        with self._fp_lock:
+            self._fp_memo[name] = fp
+        return fp
+
+    def _own_part(self, mdef) -> tuple[str, ...] | None:
+        """A model's own part of its fingerprint: its materialization
+        params, its fn's source text, its SQL text and its hooks' source
+        (None = an unsourceable fn or hook).  None of it changes while
+        the ``ModelDef`` object stays the same — ``ModelDef`` is frozen
+        — so it is computed once per Runner and served again only for
+        that same object; a redefined model is a new ``ModelDef``."""
+        hit = self._own_parts.get(mdef.name)
+        if hit is not None and hit[0] is mdef:
+            return hit[1]
+        parts = [mdef.name, mdef.materialized, ",".join(mdef.partition_by),
                  ",".join(mdef.bucket_by), str(mdef.n_buckets),
                  mdef.watermark_col, ",".join(mdef.zorder_by),
                  str(mdef.zorder_files),
@@ -628,27 +683,12 @@ class Runner:
             for h in (*mdef.pre_hook, *mdef.post_hook):
                 parts.append("hook:" + (h if isinstance(h, str)
                                         else inspect.getsource(h)))
+            own = tuple(parts)
         except (OSError, TypeError):
-            parts = None
-        if parts is not None:
-            for d in sorted(mdef.deps):
-                if d in self.registry:
-                    sub = self._fingerprint(d, relations)
-                    if sub is None:
-                        parts = None
-                        break
-                    parts.append(f"{d}:{sub}")
-                    continue
-                sub = self._source_fingerprint(d, relations[d])
-                if sub is None:
-                    parts = None
-                    break
-                parts.append(sub)
-        fp = (None if parts is None
-              else hashlib.sha1("\n".join(parts).encode()).hexdigest())
+            own = None
         with self._fp_lock:
-            self._fp_memo[name] = fp
-        return fp
+            self._own_parts[mdef.name] = (mdef, own)
+        return own
 
     @staticmethod
     def _source_fingerprint(name: str, src: DataFrame) -> str | None:
@@ -693,7 +733,7 @@ class Runner:
         if not os.path.isdir(path):
             return None
         fp = self._fingerprint(name, relations)
-        rec = self._load_state().get(name)
+        rec = self._state.get(name)
         if fp is None or not isinstance(rec, dict) \
                 or rec["fingerprint"] != fp:
             return None
@@ -711,22 +751,22 @@ class Runner:
                    .parquet(path))
             with self._fp_lock:
                 self._served[name] = (key, out)
-        out.createOrReplaceTempView(name)
+        self._register(name, out)
         self._note_ledger(name, True, stamps)
         return out
 
     def _view_key(self, name: str, mdef,
                   relations: dict[str, DataFrame]) -> tuple | None:
-        """refresh="changed": what a view's handle is memoized under
-        across this Runner's passes — its fingerprint and its upstream
-        relations, held by reference and compared with ``is``.  An
-        ephemeral node (a singular test's query too) follows the same
-        rule.  None = the memo does not apply: a stored materialization,
-        not a changed pass (``full_refresh`` and ``empty`` included), a
-        node with hooks (they run every pass), or an unknowable
+        """What a view's handle is memoized under across this Runner's
+        passes — its fingerprint and its upstream relations, held by
+        reference and compared with ``is``.  Every pass stores its
+        handle, a full build's too; only a refresh="changed" pass serves
+        from the memo.  An ephemeral node (a singular test's query too)
+        follows the same rule.  None = the memo does not apply: a stored
+        materialization, a ``full_refresh`` or ``empty`` pass, a node
+        with hooks (they run every pass), or an unknowable
         fingerprint."""
         if (mdef.materialized not in ("view", "ephemeral")
-                or not self._refresh_changed
                 or self._full_refresh or self._empty
                 or mdef.pre_hook or mdef.post_hook):
             return None
@@ -849,11 +889,12 @@ class Runner:
             self.last_refresh_report["skipped"].append(name)
             return skipped
         view_key = self._view_key(name, mdef, relations)
-        hit = self._served.get(name) if view_key is not None else None
+        hit = (self._served.get(name)
+               if view_key is not None and self._refresh_changed else None)
         if (hit is not None and hit[0][0] == view_key[0]
                 and all(a is b for a, b in zip(hit[0][1], view_key[1]))):
             if mdef.materialized == "view":
-                hit[1].createOrReplaceTempView(name)
+                self._register(name, hit[1])
             self.last_refresh_report["built"].append(name)
             return hit[1]
         refs = {d: relations[d] for d in mdef.deps}
@@ -931,7 +972,7 @@ class Runner:
                 # is deliberately left untouched (non-destructive), and
                 # no build state is recorded below so the next real run
                 # rebuilds.
-                df.createOrReplaceTempView(name)
+                self._register(name, df)
                 self.last_refresh_report["built"].append(name)
                 if mdef.post_hook:
                     rels = dict(relations)
@@ -957,7 +998,7 @@ class Runner:
         elif mdef.materialized == "ephemeral":
             pass  # inlined into consumers; no view, no storage
         else:
-            df.createOrReplaceTempView(name)
+            self._register(name, df)
         if view_key is not None:
             with self._fp_lock:
                 self._served[name] = (view_key, df)
@@ -1047,7 +1088,7 @@ class Runner:
             # Tracked so clean() drops it along with the table — a
             # surviving alias over a dropped table would dangle on the
             # deleted path (r7 self-review finding).
-            out.createOrReplaceTempView(name)
+            self._register(name, out)
             self._alias_views.add(name)
             return out
         if n_buckets:
@@ -1757,8 +1798,28 @@ class Runner:
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
         out = reader.parquet(path)
-        out.createOrReplaceTempView(name)
+        self._register(name, out)
         return out
+
+    def _register(self, name: str, df: DataFrame) -> None:
+        """Register ``df`` as the temp view ``name``, unless the session
+        still holds the view this Runner registered for this same handle.
+        After registering, the session's raw view object is kept by
+        reference; a later serve of the same DataFrame (``is``) skips the
+        registration only while the session's view under ``name`` still
+        ``equals`` it.  A re-registration by anyone — another Runner, the
+        user, this Runner with another handle — makes a new view object
+        with a new creation time, so it compares unequal, and a dropped
+        view is absent: both register again."""
+        catalog = self.spark._jsparkSession.sessionState().catalog()
+        hit = self._views.get(name)
+        if (hit is not None and hit[0] is df
+                and catalog.getRawTempView(name).contains(hit[1])):
+            return
+        df.createOrReplaceTempView(name)
+        raw = catalog.getRawTempView(name).get()
+        with self._fp_lock:
+            self._views[name] = (df, raw)
 
     def clean(self) -> None:
         """dbt clean analog (dbt_project.yml:13-15): drop the warehouse
@@ -1774,4 +1835,5 @@ class Runner:
         self._alias_views.clear()
         with self._fp_lock:
             self._served.clear()
+            self._views.clear()
         shutil.rmtree(self.warehouse_dir, ignore_errors=True)

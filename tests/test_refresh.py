@@ -601,22 +601,20 @@ def test_partitioned_and_widened_incremental_skip_with_read_back_schema(
 # earlier passes made, once every refresh check has passed
 # --------------------------------------------------------------------------
 
-def test_second_noop_refresh_on_one_runner_serves_its_own_handles(
-        spark, tmp_path, monkeypatch):
+def _count_calls(monkeypatch, *keys: str) -> dict[str, int]:
+    """Count the calls to ``spark.sql`` (``"sql"``),
+    ``DataFrameReader.parquet`` (``"parquet"``) and
+    ``DataFrame.createOrReplaceTempView`` (``"view"``), for the keys
+    given; returns the live counters.  A classic session's handles are
+    ``pyspark.sql.classic.dataframe.DataFrame``, which overrides the
+    shared API class's ``createOrReplaceTempView``."""
     from pyspark.sql import DataFrameReader, SparkSession
+    from pyspark.sql.classic.dataframe import DataFrame
 
-    from dbt_demo_spark.core.sqlmodel import register_sql_model
-
-    wh = _tested_project(spark, tmp_path)
-    reg = _tested_registry(tmp_path)
-    register_sql_model(reg, "orders_by_status",
-                       "select status, count(*) as n "
-                       "from {{ ref('stg_orders') }} group by status")
-    models = {n for n in reg.names()
-              if reg[n].materialized in ("table", "view")}
-    assert models == {"stg_orders", "stg_customers", "orders_by_status",
-                      "fct_orders", "dim_customers"}
-    calls = {"parquet": 0, "sql": 0}
+    targets = {"sql": (SparkSession, "sql"),
+               "parquet": (DataFrameReader, "parquet"),
+               "view": (DataFrame, "createOrReplaceTempView")}
+    calls = dict.fromkeys(keys, 0)
 
     def counting(key, fn):
         def wrapped(*args, **kwargs):
@@ -624,10 +622,32 @@ def test_second_noop_refresh_on_one_runner_serves_its_own_handles(
             return fn(*args, **kwargs)
         return wrapped
 
-    monkeypatch.setattr(DataFrameReader, "parquet",
-                        counting("parquet", DataFrameReader.parquet))
-    monkeypatch.setattr(SparkSession, "sql",
-                        counting("sql", SparkSession.sql))
+    for key in keys:
+        cls, attr = targets[key]
+        monkeypatch.setattr(cls, attr, counting(key, getattr(cls, attr)))
+    return calls
+
+
+def _sql_view_registry(tmp_path):
+    """``_tested_registry`` plus a SQL-text view over ``stg_orders``."""
+    from dbt_demo_spark.core.sqlmodel import register_sql_model
+
+    reg = _tested_registry(tmp_path)
+    register_sql_model(reg, "orders_by_status",
+                       "select status, count(*) as n "
+                       "from {{ ref('stg_orders') }} group by status")
+    return reg
+
+
+def test_second_noop_refresh_on_one_runner_serves_its_own_handles(
+        spark, tmp_path, monkeypatch):
+    wh = _tested_project(spark, tmp_path)
+    reg = _sql_view_registry(tmp_path)
+    models = {n for n in reg.names()
+              if reg[n].materialized in ("table", "view")}
+    assert models == {"stg_orders", "stg_customers", "orders_by_status",
+                      "fct_orders", "dim_customers"}
+    calls = _count_calls(monkeypatch, "parquet", "sql")
     r = Runner(spark, reg, wh)
     sources = _tested_sources(spark, tmp_path)
     first = r.build(sources, refresh="changed")
@@ -729,3 +749,120 @@ def test_one_runner_serves_rebuilt_rows_not_memoized_handles(
     again = r.build(sources, refresh="changed")
     assert again.ok and len(hook_calls) == 4
     assert again.relations["fct_orders"].count() == 12
+
+
+def test_first_noop_refresh_after_a_full_build_serves_every_handle(
+        spark, tmp_path, monkeypatch):
+    """A full build fills the view memo too, so the very first no-op
+    refresh on the same Runner runs its checks and nothing else."""
+    _write_orders(spark, str(tmp_path / "orders"))
+    _write_customers(spark, str(tmp_path / "customers"))
+    r = Runner(spark, _sql_view_registry(tmp_path), str(tmp_path / "wh"))
+    sources = _tested_sources(spark, tmp_path)
+    built = r.build(sources)
+    assert built.ok, built.to_json()
+    calls = _count_calls(monkeypatch, "parquet", "sql", "view")
+    before = _job_ids(spark)
+    served = r.build(sources, refresh="changed")
+    assert _job_ids(spark) - before == set()
+    assert calls == {"parquet": 0, "sql": 0, "view": 0}
+    assert served.ok
+    assert set(served.relations) == set(built.relations)
+    for name, df in built.relations.items():
+        assert served.relations[name] is df, name
+    assert sorted(r.last_refresh_report["skipped"]) == ["dim_customers",
+                                                        "fct_orders"]
+    assert sorted(spark.table("orders_by_status").collect()) == [
+        ("F", 6), ("O", 6)]
+
+
+@pytest.mark.parametrize("case", ["noop", "other_runner", "dropped",
+                                  "clean"])
+def test_noop_refresh_registers_a_temp_view_only_when_the_session_lost_it(
+        spark, tmp_path, monkeypatch, case):
+    _write_orders(spark, str(tmp_path / "orders"))
+    _write_customers(spark, str(tmp_path / "customers"))
+    reg = _sql_view_registry(tmp_path)
+    names = ["stg_orders", "stg_customers", "orders_by_status",
+             "fct_orders", "dim_customers"]
+    r = Runner(spark, reg, str(tmp_path / "wh"))
+    sources = _tested_sources(spark, tmp_path)
+    assert r.build(sources).ok
+    served = r.build(sources, refresh="changed").relations
+
+    if case == "other_runner":
+        # another warehouse, the same model names, fewer orders
+        other = Runner(spark, reg, str(tmp_path / "other_wh")).build(
+            dict(sources, orders=spark.read.parquet(
+                str(tmp_path / "orders")).filter("order_id < 6")))
+        assert other.ok and spark.table("fct_orders").count() == 6
+        lost = names
+    elif case == "dropped":
+        lost = ["stg_orders", "fct_orders"]
+        for name in lost:
+            assert spark.catalog.dropTempView(name)
+    elif case == "clean":
+        r.clean()
+        lost = names
+    else:
+        lost = []
+
+    calls = _count_calls(monkeypatch, "view")
+    res = r.build(sources, refresh="changed")
+    assert res.ok, res.to_json()
+    # after clean() every node runs again, and each of the two SQL-text
+    # nodes (orders_by_status, the singular test) binds its one ref
+    # under a private view while its fn runs
+    assert calls == {"view": len(lost) + (2 if case == "clean" else 0)}
+    for name in names:
+        if case != "clean":
+            assert res.relations[name] is served[name], (case, name)
+        assert sorted(spark.table(name).collect()) == \
+            sorted(res.relations[name].collect()), (case, name)
+    assert spark.table("fct_orders").count() == 12
+    # registered again, the views are the Runner's own once more
+    calls["view"] = 0
+    assert r.build(sources, refresh="changed").ok
+    assert calls == {"view": 0}
+
+
+def test_parallel_passes_keep_every_build_record_and_view(
+        spark, tmp_path, monkeypatch):
+    """Eight threads on a smaller host with a short switch interval: every
+    table's build record survives the concurrent state writes and every
+    view its concurrent registration, so the next parallel no-op pass
+    skips every table and registers no temp view."""
+    import json
+    import sys
+
+    src = str(tmp_path / "src")
+    _write_src(spark, src, [1, 2, 3])
+    reg = ModelRegistry()
+    for i in range(8):
+        @reg.model(f"v{i}", deps=("src",), materialized="view")
+        def view(refs, i=i):
+            return refs["src"].filter(F.col("v") >= i)
+
+        @reg.model(f"t{i}", deps=(f"v{i}",), materialized="table")
+        def table(refs, i=i):
+            return refs[f"v{i}"].groupBy("day").count()
+
+    tables = sorted(f"t{i}" for i in range(8))
+    wh = str(tmp_path / "wh")
+    sources = {"src": spark.read.parquet(src)}
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        r = Runner(spark, reg, wh)
+        assert r.build(sources, threads=8).ok
+        calls = _count_calls(monkeypatch, "view")
+        res = r.build(sources, threads=8, refresh="changed")
+    finally:
+        sys.setswitchinterval(old)
+    assert res.ok and sorted(r.last_refresh_report["skipped"]) == tables
+    assert calls == {"view": 0}
+    with open(os.path.join(wh, "_build_state.json")) as f:
+        assert set(json.load(f)) == set(tables)
+    for name in tables:
+        assert sorted(spark.table(name).collect()) == \
+            sorted(res.relations[name].collect()), name
